@@ -581,17 +581,13 @@ def cleanup(catalog) -> dict[str, int]:
 
     from pyspark.sql import functions as F
 
-    from dronedb_spark.sources.fs import list_files_df, scan_paths
+    from dronedb_spark.sources.fs import dir_rows_df, list_files_df
 
     spark, root = catalog.spark, catalog.root
     # 1. entries whose file vanished (sync's delete branch, alone)
     cur = catalog.entries()
-    from dronedb_spark.catalog.store import _PATH_SCHEMA
-
     fs_paths = list_files_df(spark, root).select("path").unionByName(
-        spark.createDataFrame(
-            [(p,) for p, is_dir in scan_paths(root) if is_dir], schema=_PATH_SCHEMA
-        )
+        dir_rows_df(spark, root).select("path")
     )
     kept = cur.join(fs_paths, "path", "left_semi").localCheckpoint(eager=True)
     removed_entries = cur.count() - kept.count()

@@ -36,7 +36,7 @@ class PasswordManager:
         salt = secrets.token_hex(16)
         row = self.spark.createDataFrame([(salt, _hash(salt, password))], schema=_SCHEMA)
         cur = self.table.read()
-        self.table.write(cur.unionByName(row).localCheckpoint(eager=True))
+        self.table.write(cur.unionByName(row))
 
     def verify(self, password: str) -> bool:
         rows = self.table.read().collect()

@@ -14,6 +14,24 @@ anti-join + union (no per-row SQL), subtree ops are prefix-predicate
 rewrites pushed to the Parquet scan, and the mtime-then-hash short-circuit
 (checkUpdate, dbops.cpp:441-472 — SURVEY X4) is staged so content hashing
 only runs for files whose mtime actually changed.
+
+Per-operation budget: on a catalog of hundreds of entries the cost of an
+operation is its Spark jobs and Python tasks, not its rows, so each
+operation pays only for the work it does:
+
+* a snapshot read starts no job — the schema is pinned (``write``
+  conforms every frame to it), so there is no Parquet inference job;
+* ``sync`` lists the tree once (the ``binaryFile`` listing plus the
+  directory walk) and uses that listing for the status counts, the
+  change set and the prune of vanished paths, then writes ONE snapshot
+  (syncIndex is one walk too, dbops.cpp:989-1032);
+* the read+hash+parse kernel runs on at most one Python task per core
+  (``ingest_listing``) — a Python task costs a worker round-trip
+  whatever its row count;
+* a frame that only feeds a snapshot write is not checkpointed first:
+  the write target is always a new version dir, so it never reads what
+  it overwrites.  Only a frame read by two branches (the ingest output,
+  which feeds both the anti-join and the union) is checkpointed.
 """
 
 from __future__ import annotations
@@ -23,8 +41,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pyspark.sql import types as T
 
 from dronedb_spark.catalog.derive import ENTRY_TYPES
 from dronedb_spark.functions.like import folder_pattern, like_col, sanitize_query_param
@@ -40,12 +56,9 @@ from dronedb_spark.sources.fs import (
     dir_rows_df,
     ingest_listing,
     list_files_df,
-    scan_paths,
 )
 
 CATALOG_DIR = ".ddb_spark"
-
-_PATH_SCHEMA = T.StructType([T.StructField("path", T.StringType(), False)])
 
 
 class SnapshotTable:
@@ -72,17 +85,27 @@ class SnapshotTable:
             p = os.path.join(self.base, version)
             if version not in self.versions() or not os.path.isdir(p):
                 raise ValueError(f"unknown or vacuumed snapshot version {version!r}")
-            return self.spark.read.parquet(p)
+            return self._scan(p)
         p = self._current_path()
         if p is None:
             return self.spark.createDataFrame([], schema=self.schema)
-        return self.spark.read.parquet(p)
+        return self._scan(p)
+
+    def _scan(self, p: str) -> DataFrame:
+        # schema pinned, not inferred: inference is a one-task Spark job
+        # per read, and write() conforms every snapshot to this schema
+        return self.spark.read.schema(self.schema).parquet(p)
 
     def write(self, df: DataFrame) -> None:
+        """Write ``df`` as the next version and flip CURRENT to it.  The
+        frame is conformed to the table schema (column order and types)
+        so that the pinned-schema read can never misread a snapshot."""
         p = self._current_path()
         n = 0 if p is None else int(os.path.basename(p).lstrip("v")) + 1
         target = os.path.join(self.base, f"v{n:06d}")
-        df.write.mode("overwrite").parquet(target)
+        df.select(
+            [F.col(f.name).cast(f.dataType) for f in self.schema.fields]
+        ).write.mode("overwrite").parquet(target)
         tmp = os.path.join(self.base, f".CURRENT.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             f.write(f"v{n:06d}")
@@ -164,31 +187,40 @@ class DatasetCatalog:
         rows for files gone from disk is sync()'s job).
 
         Fully distributed: the file listing is the ``list_files_df``
-        binaryFile scan, the changed set is an mtime anti-join, and the
+        binaryFile scan, the changed set is an mtime join, and the
         workers that own a changed file read+hash+parse it in place — no
         path list is ever collect()ed to the driver (round 1's os.walk +
         collect() was flagged as the 100M-file bottleneck)."""
-        cur = self.entries()
         files = list_files_df(self.spark, self.root)
         if rel_paths is not None:
             files = files.filter(F.col("path").isin(list(rel_paths)))
-        unchanged = (
-            files.join(cur.select("path", "mtime"), "path")
-            .filter(F.col("fs_mtime") == F.col("mtime"))
-            .select("path")
+        dirs = dir_rows_df(self.spark, self.root, rel_paths)
+        self._upsert(self.entries(), files, dirs, prune=False)
+        return self.entries()
+
+    def _upsert(self, cur: DataFrame, files: DataFrame, dirs: DataFrame, prune: bool) -> None:
+        """Write one entries snapshot: ``cur`` with every new or
+        mtime-changed file of the listing ``files`` re-ingested and the
+        directory rows ``dirs`` replaced.  With ``prune``, rows whose path
+        is in neither listing are dropped (sync's Deleted class)."""
+        # one pass over the listing: a small index broadcasts, so the
+        # listing scan, the mtime test and the ingest kernel share a stage
+        changed = files.join(cur.select("path", "mtime"), "path", "left").filter(
+            F.col("mtime").isNull() | (F.col("fs_mtime") != F.col("mtime"))
         )
-        changed = files.join(unchanged, "path", "left_anti")
         # checkpoint: fresh feeds both the anti-join and the union — without
         # a barrier Catalyst would run the read+hash kernel twice (no CSE)
         fresh = (
             ingest_listing(changed, self.root)
-            .unionByName(dir_rows_df(self.spark, self.root, rel_paths))
+            .unionByName(dirs)
             .localCheckpoint(eager=True)
         )
-        keep_cur = cur.join(fresh.select("path"), "path", "left_anti")
-        out = keep_cur.unionByName(fresh).localCheckpoint(eager=True)
-        self._entries.write(out)
-        return out
+        keep = cur.join(fresh.select("path"), "path", "left_anti")
+        if prune:
+            # every live directory is in fresh, so a kept row is live
+            # exactly when its file is still listed
+            keep = keep.join(files.select("path"), "path", "left_semi")
+        self._entries.write(keep.unionByName(fresh))
 
     def remove(self, pattern: str) -> int:
         """W3 (removeFromIndex, dbops.cpp:717-914): LIKE-match delete of
@@ -198,14 +230,8 @@ class DatasetCatalog:
         fp = folder_pattern(pattern)
         cond = like_col("path", p) | like_col("path", fp)
         removed = cur.filter(cond).count()
-        keep = cur.filter(~cond).localCheckpoint(eager=True)
-        self._entries.write(keep)
-        meta = self.meta()
-        self._meta.write(
-            meta.filter(~(like_col("path", p) | like_col("path", fp))).localCheckpoint(
-                eager=True
-            )
-        )
+        self._entries.write(cur.filter(~cond))
+        self._meta.write(self.meta().filter(~cond))
         return removed
 
     def move(self, src: str, dest: str) -> None:
@@ -228,31 +254,23 @@ class DatasetCatalog:
         moved = moved.withColumn(
             "depth", (F.length("path") - F.length(F.replace("path", F.lit("/"), F.lit("")))).cast("int")
         )
-        self._entries.write(moved.localCheckpoint(eager=True))
-        meta = self.meta()
-        meta_hit = (F.col("path") == src) | F.col("path").startswith(src + "/")
+        self._entries.write(moved)
         self._meta.write(
-            meta.withColumn(
-                "path", F.when(meta_hit, new_path).otherwise(F.col("path"))
-            ).localCheckpoint(eager=True)
+            self.meta().withColumn("path", F.when(is_hit, new_path).otherwise(F.col("path")))
         )
 
     def sync(self) -> dict:
         """W4 (syncIndex, dbops.cpp:989-1032): reconcile the index against
-        the filesystem — Deleted rows dropped, Modified re-parsed."""
-        st = self.status()
-        classes = {r["status"]: r["n"] for r in st.groupBy("status").agg(F.count("*").alias("n")).collect()}
-        self.add()  # add() already upserts new + modified and keeps unchanged
-        # drop rows whose files are gone
+        the filesystem — Deleted rows dropped, Modified and NotIndexed
+        re-parsed, NotModified kept.  One listing of the tree feeds the
+        status counts, the change set and the prune; one snapshot is
+        written.  Returns the status class counts before the sync."""
         cur = self.entries()
-        fs_paths = list_files_df(self.spark, self.root).select("path").unionByName(
-            self.spark.createDataFrame(
-                [(p,) for p, is_dir in scan_paths(self.root) if is_dir], schema=_PATH_SCHEMA
-            )
-        )
-        self._entries.write(
-            cur.join(fs_paths, "path", "left_semi").localCheckpoint(eager=True)
-        )
+        files = list_files_df(self.spark, self.root)
+        dirs = dir_rows_df(self.spark, self.root)
+        st = _status(cur, files, dirs)
+        classes = {r["status"]: r["count"] for r in st.groupBy("status").count().collect()}
+        self._upsert(cur, files, dirs, prune=True)
         return classes
 
     def rescan(self, types: list[int] | None = None) -> None:
@@ -268,34 +286,15 @@ class DatasetCatalog:
         files = list_files_df(self.spark, self.root).join(targets, "path", "left_semi")
         fresh = ingest_listing(files, self.root).localCheckpoint(eager=True)
         keep = cur.join(fresh.select("path"), "path", "left_anti")
-        self._entries.write(keep.unionByName(fresh).localCheckpoint(eager=True))
+        self._entries.write(keep.unionByName(fresh))
 
     # ------------------------------------------------------------ status/sync algebra
 
     def status(self) -> DataFrame:
         """J7 (statusIndex, status.cpp:16-77): full-outer join of index vs
         filesystem; NotModified / Modified / Deleted / NotIndexed."""
-        cur = self.entries().select("path", "mtime")
-        fs = self.spark.createDataFrame(
-            [
-                (p, int(os.path.getmtime(os.path.join(self.root, p))))
-                for p, _ in scan_paths(self.root)
-            ],
-            schema=T.StructType(
-                [
-                    T.StructField("path", T.StringType(), False),
-                    T.StructField("fs_mtime", T.LongType(), False),
-                ]
-            ),
-        )
-        j = cur.join(fs, "path", "full_outer")
-        status = (
-            F.when(F.col("fs_mtime").isNull(), "Deleted")
-            .when(F.col("mtime").isNull(), "NotIndexed")
-            .when(F.col("fs_mtime") != F.col("mtime"), "Modified")
-            .otherwise("NotModified")
-        )
-        return j.select("path", status.alias("status"))
+        files = list_files_df(self.spark, self.root)
+        return _status(self.entries(), files, dir_rows_df(self.spark, self.root))
 
     def stamp(self) -> str:
         """§1.6 content-addressed identity."""
@@ -335,7 +334,7 @@ class DatasetCatalog:
             [(uuid.uuid4().hex, path, key, data, int(mtime if mtime is not None else _t.time()))],
             schema=META_SCHEMA,
         )
-        self._meta.write(meta.unionByName(row).localCheckpoint(eager=True))
+        self._meta.write(meta.unionByName(row))
 
     def meta_get(self, key: str, path: str = "") -> list[str]:
         rows = (
@@ -348,12 +347,9 @@ class DatasetCatalog:
 
     def meta_unset(self, key: str, path: str = "") -> int:
         meta = self.meta()
-        n = meta.filter((F.col("path") == path) & (F.col("key") == key)).count()
-        self._meta.write(
-            meta.filter(~((F.col("path") == path) & (F.col("key") == key))).localCheckpoint(
-                eager=True
-            )
-        )
+        hit = (F.col("path") == path) & (F.col("key") == key)
+        n = meta.filter(hit).count()
+        self._meta.write(meta.filter(~hit))
         return n
 
     def chattr(self, key: str, value: str) -> None:
@@ -422,3 +418,20 @@ class DatasetCatalog:
             "entries": self._entries.vacuum(keep),
             "meta": self._meta.vacuum(keep),
         }
+
+
+def _status(cur: DataFrame, files: DataFrame, dirs: DataFrame) -> DataFrame:
+    """(path, status) of the index ``cur`` against the listing: ``files``
+    (``list_files_df``) and ``dirs`` (``dir_rows_df``).  The mtimes are
+    the ones add() compares, so a NotModified path is one add() skips."""
+    fs = files.select("path", "fs_mtime").unionByName(
+        dirs.select("path", F.col("mtime").alias("fs_mtime"))
+    )
+    j = cur.select("path", "mtime").join(fs, "path", "full_outer")
+    status = (
+        F.when(F.col("fs_mtime").isNull(), "Deleted")
+        .when(F.col("mtime").isNull(), "NotIndexed")
+        .when(F.col("fs_mtime") != F.col("mtime"), "Modified")
+        .otherwise("NotModified")
+    )
+    return j.select("path", status.alias("status"))

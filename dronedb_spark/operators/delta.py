@@ -70,10 +70,14 @@ def stamp_checksum(entries: DataFrame, meta: DataFrame | None = None) -> DataFra
     """A8 (database.cpp:288-331): SHA256 over path+hash concatenated in
     path order, then meta ids in id order."""
     ent = entries.select(F.col("path"), F.col("hash"))
+    # one array_join over the sorted pairs — linear in the entry count
+    # (an ``acc || x.path || x.hash`` fold copies the growing string per
+    # entry: quadratic).  array_join skips NULL elements, so the count
+    # guard keeps NULL semantics: any NULL path or hash → NULL body.
+    pairs = F.expr("transform(sort_array(collect_list(struct(path, hash))), x -> x.path || x.hash)")
     body = ent.agg(
-        F.expr(
-            "aggregate(sort_array(collect_list(struct(path, hash))), '',"
-            " (acc, x) -> acc || x.path || x.hash)"
+        F.when(
+            F.count(F.lit(1)) == F.count(F.concat("path", "hash")), F.array_join(pairs, "")
         ).alias("body")
     )
     if meta is not None:

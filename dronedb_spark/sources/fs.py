@@ -261,7 +261,15 @@ def ingest_listing(listing: DataFrame, root: str) -> DataFrame:
     """Hash+fingerprint+parse the files named by ``listing`` (path,
     fs_mtime): each worker OPENS its partition's files from shared storage
     inside the Arrow kernel — the changed-set selection stays a DataFrame
-    (mtime join), no path list ever rides through the driver."""
+    (mtime join), no path list ever rides through the driver.
+
+    The kernel runs on at most ``defaultParallelism`` partitions: a
+    Python task costs a worker round-trip (~100 ms on four cores)
+    whatever its row count, and a binaryFile scan charges every file
+    ``openCostInBytes`` (4 MB), so small files pack only ~32 to a split —
+    uncapped, a 500-file tree runs 16 kernel tasks, most of them near
+    empty, and an empty change set pays for all of them.  ``coalesce``
+    never adds partitions and never shuffles."""
     root = os.path.abspath(root)
     parser = _active_parser()
 
@@ -279,7 +287,12 @@ def ingest_listing(listing: DataFrame, root: str) -> DataFrame:
                 rows.append(_entry_row(rel, data, fs_mtime, parser, full_path=full))
             yield pd.DataFrame(rows, columns=cols)
 
-    return listing.select("path", "fs_mtime").mapInPandas(run, schema=ENTRIES_SCHEMA)
+    cores = listing.sparkSession.sparkContext.defaultParallelism
+    return (
+        listing.select("path", "fs_mtime")
+        .coalesce(cores)
+        .mapInPandas(run, schema=ENTRIES_SCHEMA)
+    )
 
 
 def dir_rows_df(spark: SparkSession, root: str, rel_paths: list[str] | None = None) -> DataFrame:

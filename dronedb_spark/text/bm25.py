@@ -49,11 +49,19 @@ def bm25_scores(docs: DataFrame, query_terms: list[str], k1: float = K1, b: floa
     # re-ran the corpus tokenize+explode for dl AND (via avgdl) a third
     # time, plus a token-grain aggregation, to compute what each row
     # already knows.  Docs with zero non-empty tokens are excluded to
-    # match the exploded form (they contribute no token rows).
-    dl = docs.select(
-        "doc_id",
-        F.size(F.filter(F.split("text", " "), lambda x: x != "")).alias("dl"),
-    ).filter(F.col("dl") > 0)
+    # match the exploded form (they contribute no token rows).  The
+    # doc-grain sum keeps that form's semantics when a doc_id repeats:
+    # one dl per doc_id (the rows' lengths added), so the tf join
+    # cannot fan out and avgdl averages over distinct ids.
+    dl = (
+        docs.select(
+            "doc_id",
+            F.size(F.filter(F.split("text", " "), lambda x: x != "")).alias("dl"),
+        )
+        .filter(F.col("dl") > 0)
+        .groupBy("doc_id")
+        .agg(F.sum("dl").alias("dl"))
+    )
     n_docs = docs.select(F.countDistinct("doc_id").alias("n"))
     avgdl = dl.agg(F.avg("dl").alias("avgdl"))
     hits = toks.join(q, "tok", "inner")

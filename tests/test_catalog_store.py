@@ -316,3 +316,163 @@ def test_dataset_diff_statuses(spark):
     )
     got = {r["doc_id"]: r["status"] for r in dataset_diff(old, new).collect()}
     assert got == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}
+
+
+# ------------------------------------------------------------ per-operation budget
+
+
+def _jobs_in_group(spark, group: str, fn) -> list[int]:
+    """Spark job ids started by ``fn`` under a fresh job group.  The
+    listener bus is drained before the status tracker is read."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_reads_start_no_job(spark, tree):
+    """entries()/meta() pin the table schema: opening a snapshot runs no
+    Parquet schema-inference job."""
+    cat = DatasetCatalog.init(spark, str(tree))
+    cat.add()
+    cat.meta_set("name", '"x"')
+    assert _jobs_in_group(spark, "reads_no_job", lambda: (cat.entries().schema, cat.meta().schema)) == []
+    # the group really records jobs when there are some
+    assert _jobs_in_group(spark, "reads_count", lambda: cat.entries().count())
+
+
+def test_snapshot_write_conforms_to_schema(spark, tmp_path):
+    """write() selects and casts to the table schema, so a reordered
+    frame or a widened column still reads back under the pinned schema."""
+    from pyspark.sql import functions as F
+
+    from dronedb_spark.catalog.store import SnapshotTable
+    from dronedb_spark.sources.fs import ENTRIES_SCHEMA
+
+    t = SnapshotTable(spark, str(tmp_path / "snap"), ENTRIES_SCHEMA)
+    row = ("a/b.jpg", "ab" * 32, 3, "null", 7, 11, 1, 1.5, 2.5, 3.5, 1.5, 2.5, 1.5, 2.5, 9)
+    want = spark.createDataFrame([row], schema=ENTRIES_SCHEMA).collect()
+    base = spark.createDataFrame([row], schema=ENTRIES_SCHEMA)
+    for df in (
+        base.select(list(reversed(base.columns))),
+        base.withColumn("type", F.col("type").cast("long")),
+    ):
+        t.write(df)
+        assert t.read().collect() == want
+        on_disk = spark.read.parquet(t._current_path()).schema
+        assert [(f.name, f.dataType) for f in on_disk] == [
+            (f.name, f.dataType) for f in ENTRIES_SCHEMA
+        ]
+
+
+def test_ingest_listing_runs_at_most_one_task_per_core(spark, tmp_path):
+    """A listing of small files scans into more partitions than cores
+    (openCostInBytes per file); the Python ingest is coalesced to at
+    most defaultParallelism tasks and still ingests every file."""
+    from dronedb_spark.sources.fs import ingest_listing, list_files_df
+
+    root = tmp_path / "many"
+    root.mkdir()
+    for i in range(300):
+        (root / f"f{i:03d}.txt").write_text(f"{i}\n")
+    cores = spark.sparkContext.defaultParallelism
+    listing = list_files_df(spark, str(root))
+    assert listing.rdd.getNumPartitions() > cores  # the precondition
+    out = ingest_listing(listing, str(root))
+    assert out.rdd.getNumPartitions() <= cores
+    assert out.count() == 300
+
+
+def _mutate(tree):
+    """A modify, a delete, a create and a folder rename."""
+    p = tree / "docs" / "notes.txt"
+    st = p.stat()
+    p.write_text("edited\n")
+    os.utime(p, (st.st_atime, st.st_mtime + 10))
+    os.remove(tree / "cloud.las")
+    (tree / "new.txt").write_text("new\n")
+    os.rename(tree / "images", tree / "pics")
+
+
+def test_sync_writes_one_version_and_matches_fresh_index(spark, tree, tmp_path_factory):
+    import shutil
+
+    cat = DatasetCatalog.init(spark, str(tree))
+    cat.add()
+    _mutate(tree)
+    before = len(cat.history()["entries"])
+    cat.sync()
+    assert len(cat.history()["entries"]) == before + 1
+
+    fresh_root = tmp_path_factory.mktemp("fresh")
+    shutil.copytree(tree, fresh_root, dirs_exist_ok=True,
+                    ignore=shutil.ignore_patterns(".ddb_spark"))
+    fresh = DatasetCatalog.init(spark, str(fresh_root))
+    fresh.add()
+    cols = ["path", "hash", "type", "size", "depth"]
+    got = sorted(tuple(r) for r in cat.entries().select(cols).collect())
+    want = sorted(tuple(r) for r in fresh.entries().select(cols).collect())
+    assert got == want
+    assert {"pics/a.jpg", "new.txt"} <= {r[0] for r in got}
+
+
+def test_status_classes_match_hand_computed(spark, tree):
+    cat = DatasetCatalog.init(spark, str(tree))
+    cat.add()
+    p = tree / "README.md"
+    os.utime(p, (time.time(), time.time() + 99))
+    os.remove(tree / "cloud.las")
+    (tree / "new.txt").write_text("new\n")
+    (tree / "extra").mkdir()
+    (tree / "extra" / "x.txt").write_text("x\n")
+    want = {
+        "README.md": "Modified",
+        "cloud.las": "Deleted",
+        "new.txt": "NotIndexed",
+        "extra": "NotIndexed",
+        "extra/x.txt": "NotIndexed",
+        "docs": "NotModified",
+        "docs/notes.txt": "NotModified",
+        "images": "NotModified",
+        "images/a.jpg": "NotModified",
+        "images/b.jpg": "NotModified",
+    }
+    assert {r["path"]: r["status"] for r in cat.status().collect()} == want
+    counts: dict[str, int] = {}
+    for s in want.values():
+        counts[s] = counts.get(s, 0) + 1
+    assert cat.sync() == counts
+
+
+def test_stamp_checksum_matches_hashlib_on_20k_entries(spark):
+    """The stamp is sha256 over path+hash in path order, then the meta
+    ids in order — checked against hashlib on a catalog large enough
+    that a per-entry string-copying fold would show."""
+    import hashlib
+    import random
+
+    from dronedb_spark.operators.delta import stamp_checksum
+
+    rows = [
+        (f"d{i % 97}/f{i:05d}.jpg", hashlib.sha256(str(i).encode()).hexdigest())
+        for i in range(20_000)
+    ]
+    random.Random(7).shuffle(rows)
+    ent = spark.createDataFrame(rows, "path string, hash string")
+    meta = spark.createDataFrame([("id3",), ("id1",), ("id2",)], "id string")
+    body = "".join(p + h for p, h in sorted(rows))
+    assert stamp_checksum(ent).collect()[0]["checksum"] == hashlib.sha256(
+        body.encode()
+    ).hexdigest()
+    assert stamp_checksum(ent, meta).collect()[0]["checksum"] == hashlib.sha256(
+        (body + "id1id2id3").encode()
+    ).hexdigest()
+    empty = spark.createDataFrame([], "path string, hash string")
+    assert stamp_checksum(empty).collect()[0]["checksum"] == hashlib.sha256(b"").hexdigest()
+    # a NULL hash makes the whole body NULL, as the string fold did
+    with_null = ent.unionByName(spark.createDataFrame([("z", None)], "path string, hash string"))
+    assert stamp_checksum(with_null, meta).collect()[0]["checksum"] is None

@@ -147,3 +147,54 @@ def test_hll_set_algebra_estimates_and_union_law(spark, sf_dir):
         ).collect()
     }
     assert merged == direct
+
+
+def test_bm25_duplicate_doc_id_matches_exploded_definition(spark):
+    """A repeated doc_id gets ONE length — the sum of its rows' non-empty
+    tokens, as the exploded-count definition gives — so the tf join does
+    not fan out.  Checked against DuckDB SQL of that definition."""
+    import duckdb
+
+    from dronedb_spark.text.bm25 import B, K1, bm25_scores
+
+    rows = [
+        (1, "join hash join shuffle join"),
+        (2, "join only once here today"),
+        (2, "hash  and hash again"),
+        (3, "nothing relevant at all here"),
+        (4, "shuffle the join"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        (r["doc_id"], r["score"])
+        for r in bm25_scores(docs, ["join", "hash", "shuffle"]).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = con.execute(
+        f"""
+        WITH toks AS (
+            SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+        toks_ne AS (SELECT * FROM toks WHERE tok <> ''),
+        q AS (SELECT unnest(['join', 'hash', 'shuffle']) AS tok),
+        dl AS (SELECT doc_id, COUNT(1) AS dl FROM toks_ne GROUP BY doc_id),
+        nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM documents),
+        ad AS (SELECT AVG(dl) AS avgdl FROM dl),
+        tf AS (
+            SELECT t.doc_id, t.tok, COUNT(1) AS tf
+            FROM toks_ne t JOIN q USING (tok) GROUP BY t.doc_id, t.tok),
+        dft AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY tok),
+        idf AS (
+            SELECT tok, ln((n - df + 0.5) / (df + 0.5) + 1.0) AS idf
+            FROM dft CROSS JOIN nd),
+        scored AS (
+            SELECT tf.doc_id,
+                   idf.idf * tf.tf
+                   / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / ad.avgdl)) AS part
+            FROM tf JOIN idf USING (tok) JOIN dl USING (doc_id) CROSS JOIN ad)
+        SELECT doc_id, ROUND(SUM(part), 6) AS score FROM scored GROUP BY doc_id
+        ORDER BY doc_id"""
+    ).fetchall()
+    assert got == [(d, s) for d, s in want]
+    assert [d for d, _ in got] == [1, 2, 4]

@@ -1,23 +1,25 @@
-"""Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line.
+"""Benchmark harness — times registry checks at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's core count) and prints ONE JSON line.
 
-Queries are forced with the noop sink (full computation, no driver
-collect) except explicit top-k/paging queries where collect() is the
-realistic action.
+Each row is timed by ``time_row``: an untimed warm run, then best-of-3,
+every run starting from a reset run cache.  A check registered with
+``small=True`` (top-k, paging, plans, rollups) is forced with
+``collect()``, the realistic action for it; every other check with the
+noop sink (full computation, no driver collect).  Row times depend only
+on this run: no committed artifact feeds the timing.
 
-Two modes (r12 verdict #1 — the driver's bench budget and stdout tail
-are both bounded, so the official pass must stay compact):
+Two modes (the driver's bench budget and stdout tail are both bounded,
+so the official pass must stay compact):
 
-* default (driver pass): times the curated ``DRIVER_SUBSET`` (~75 rows,
-  every operator family represented; measured wall ~7.5 min for the
-  whole warm + best-of-3 pass, well under 15 min) and prints a COMPACT
-  final JSON line — totals + the stable 24-row r1 headline map, sized
-  to survive the driver's 2000-char stdout tail.  The complete per-row
-  map for the pass is written to BENCH_SELF_DRIVER.json.
-* ``SPARK_GRAFT_BENCH_FULL=1`` (builder pass): the full ever-gated
-  registry (384+ rows, ~40 min) — the per-round BENCH_SELF.json
-  snapshot protocol, unchanged.
+* default (driver pass): times the curated ``DRIVER_SUBSET`` (~80 rows,
+  every operator family represented) and prints a COMPACT final JSON
+  line — totals + the 57-row ``LINE_ROWS`` map, sized to survive the
+  driver's 2000-char stdout tail.  The complete per-row map for the
+  pass is written to BENCH_SELF_DRIVER.json.
+* ``SPARK_GRAFT_BENCH_FULL=1`` (builder pass): every registered check,
+  in registry order (the derived driver gate order, see
+  ``dronedb_spark.suite.load_all``), written to BENCH_SELF.json.
 """
 
 from __future__ import annotations
@@ -28,315 +30,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_region_revenue",
-    "parts_topk_per_brand",
-    "events_hourly",
-    "asof_join_events",
-    "interval_join_windows",
-    "catalog_search_like",
-    "entries_meta_join",
-    "stac_items_page",
-    "delta_adds",
-    "stamp_checksum",
-    "dedup_minhash_signatures",
-    "dedup_neardup_pairs",
-    "dedup_corpus_segments",
-    "knn_cosine_top10",
-    "text_quality_metrics",
-    "raster_area_stats",
-    "zonal_volume_cutfill",
-    "text_simhash",
-    "ann_lsh_top5",
-    "formula_engine_sweep",
-    "copc_zorder_pages",
-    "vector_query_page",
-    # round-2 breadth: keyset paging, 10x-inflated segment dedup, the
-    # grouped multi-raster kernels, MVT encode, thermal calibration
-    "stac_items_keyset",
-    "dedup_corpus_segments_10x",
-    "multiraster_area_stats",
-    "stockpile_detect",
-    "contour_segments",
-    "mvt_tile_features",
-    "thermal_point_query",
-    # round-3 breadth: real codecs on real bytes (LASzip decompression,
-    # baseline-JPEG Huffman+IDCT, MVT protobuf round-trip, shapefile +
-    # GeoPackage binary decode), TPC-H extension shapes
-    "pointcloud_laz_stats",
-    "media_jpeg_channel_stats",
-    "mvt_pbf_roundtrip",
-    "shapefile_parse_features",
-    "gpkg_parse_features",
-    "q8_market_share",
-    "q18_large_orders",
-    # round-4 breadth: TopoJSON arc decode, the STAC Collection rollup,
-    # JSON sink + path extraction over the full catalog, first-seen
-    # window dedup (streaming batch twin)
-    "topojson_parse_features",
-    "stac_collection_doc",
-    "json_sink_roundtrip",
-    "stream_dedup_twin",
-    "sq8_adc_top10",
-    # round-4 late breadth: unigram-LM corpus scoring (train + skew-split
-    # score joins), distributed-prefix-sum sequence packing, bilinear
-    # region warp + index ramp, RAD coarse-chunk decode
-    "lm_doc_perplexity",
-    "pack_sequences_chunks",
-    "render_index_region",
-    "rad_coarse_splats",
-    # round-5 breadth: the 10x broadcast-inflated stress twins (linear-
-    # scaling evidence for the skew-split LM join and the distributed
-    # prefix-sum packer) and the dual-container MJPEG frame decode
-    "lm_doc_perplexity_10x",
-    "pack_sequences_10x",
-    "video_frame_decode",
-    "incremental_dedup_probe",
-    # round-6 breadth: the catalog-side 10x stress twin (anti-join path
-    # shuffle at 10x entry mass, pairs with the 1x delta_adds row), the
-    # server-side push planning core, winnowing passage-reuse pairs and
-    # the HLL register sketch
-    "delta_adds_10x",
-    "push_needed_files",
-    "winnow_overlap_pairs",
-    "hll_token_registers",
-    "cms_heavy_hitters",
-    "bm25_query_scores",
-    # round-7 breadth: the STAC projection extension, BPE corpus encode
-    # (+10x twin: encode work is vocabulary-bounded, the corpus pass is
-    # not), PQ ADC search (literal-folded LUT, map-only), and the
-    # multimodal 10x decode+join stress twin
-    "stac_item_proj_fields",
-    "bpe_encode_corpus",
-    "bpe_encode_corpus_10x",
-    "pq_adc_top10",
-    "image_dhash_neardup_10x",
-    # round-7 late breadth: the combined IVF-PQ index (cell-pruned probe
-    # + compressed ADC rescoring), audio energy-gradient fingerprint
-    # near-dup, and the RAG sliding-window chunk table
-    "ivfpq_adc_top10",
-    "audio_fp_neardup",
-    "doc_chunks_overlap",
-    "video_scene_cuts",
-    # (ivfpq_store_probe is driver-gated but not benched: a scratch-dir
-    # store WRITE per run, like the other build/workflow checks)
-    "shard_shuffle_assign",
-    "aspect_bucket_batches",
-    "compact_plan_groups",
-    "hard_negative_mining",
-    "embedding_eval_decontam",
-    "temperature_mixture_budgets",
-    "push_bloom_classify",
-    "doc_chunks_overlap_10x",
-    "flight_session_rollup",
-    "audio_fp_neardup_10x",
-    # round-8 breadth: arbitrary-boundary substring dedup (anchor counts
-    # + islands, no pair join), the residual IVF-PQ recipe, the sized
-    # Bloom screen at its second m, domain-level rollup/cap/budget
-    # composition, and the sibling-preserving STAC properties rewrite
-    "substring_dup_spans",
-    "ivfpq_residual_top10",
-    "push_bloom_classify_large",
-    "domain_quality_rollup",
-    "domain_cap_sample",
-    "domain_capped_budgets",
-    "stac_props_rewrite_siblings",
-    # round-8 late breadth: the span-removal rewrite, the Gopher rule
-    # gate, and the two-phase quota cutoff (filter + boundary-bucket
-    # rank, no per-source global sort)
-    "substring_dedup_rewrite",
-    "gopher_quality_flags",
-    "mixture_quota_twophase",
-    "audio_fp_incremental",
-    "ccnet_perplexity_buckets",
-    "cluster_quality_keep",
-    "image_dhash_incremental",
-    "ivfpq_rerank_top10",
-    "curation_pipeline_rollup",
-    "video_fp_neardup",
-    # round-8 final breadth: DSIR importance weights + the Gumbel top-k
-    # draw (two corpus featurization passes + broadcast model join), and
-    # the zero-shuffle URL canonicalization / one-shuffle canonical dedup
-    "dsir_doc_logweights",
-    "dsir_resample_topk",
-    "url_canonicalize",
-    "url_canonical_dedup",
-    "url_blocklist_hosts",
-    "warc_text_extract",
-    "image_text_alignment",
-    "url_canonical_dedup_10x",
-    "dsir_doc_logweights_10x",
-    "length_quantiles_exact",
-    "stream_url_dedup_twin",
-    "unicode_normalize_corpus",
-    "domain_pagerank",
-    "langid_nb_predictions",
-    "webdataset_roundtrip",
-    "crawl_entry_rollup",
-    # round-8 session breadth: bounded-memory heavy hitters (+10x — the
-    # candidate set must stay flat while the corpus grows), the C4 gate,
-    # paragraph dedup (+10x +incremental probe), epoch materialization,
-    # 1-bit quantized search + rerank, crawl anchors/robots, the C4+dedup
-    # composition, LSH calibration, Matryoshka budgets, collocations,
-    # drift deciles, dataset diff, and the JSONL roundtrip
-    "heavy_hitters_exact",
-    "heavy_hitters_exact_10x",
-    "c4_line_clean",
-    "paragraph_dedup",
-    "paragraph_dedup_10x",
-    "paragraph_dedup_incremental",
-    "epoch_materialize",
-    "binq_hamming_top10",
-    "binq_rerank_top10",
-    "anchor_text_rollup",
-    "robots_url_verdicts",
-    "web_curation_rollup",
-    "lsh_calibration",
-    "matryoshka_topk",
-    "bigram_lift_topk",
-    "embedding_drift_deciles",
-    "dataset_diff_rollup",
-    "jsonl_roundtrip",
-    # round-8 session tail: event analytics (grid resample, funnel,
-    # cohorts, rolling actives, MAD fences) and webgraph triangles
-    "events_resample_ffill",
-    "funnel_view_click_purchase",
-    "cohort_retention",
-    "rolling_active_users",
-    "mad_outliers",
-    "domain_triangles",
-    # round-9 breadth: the incremental substring-anchor probe, user
-    # sessionization, corpus-composition stats (saturation / novelty /
-    # source overlap), rational TF-IDF and the deterministic sample
-    # (model/build checks stay unbenched: scratch-dir builds per run)
-    "substring_dedup_incremental",
-    "sessionize_gap_windows",
-    "saturation_scaling_curve",
-    "ngram_novelty_profile",
-    "cross_source_overlap",
-    "tfidf_topterms",
-    "reservoir_sample_fixed",
-    # round-9 late breadth (r10-gate debuts): components, stratified
-    # sampling, fertility, CUSUM, the exact prefix-filter ssjoin, the
-    # winnow store probe and the substring stream twin
-    "domain_components",
-    "stratified_length_sample",
-    "bpe_fertility_profile",
-    "event_rate_cusum",
-    "jaccard_ssjoin_pairs",
-    "winnow_store_probe",
-    "stream_substring_probe_twin",
-    "image_dup_clusters",
-    "video_fp_incremental",
-    "eval_set_pipeline_rollup",
-    "classifier_roc_auc",
-    "inverted_phrase_query",
-    "ohlc_downsample",
-    "ivf_recall_curve",
-    "sitemap_frontier_plan",
-    "zorder_layout_skipping",
-    "event_autocorrelation",
-    "kwic_snippets",
-    "hll_merge_daily",
-    "join_skew_profile",
-    "preference_pair_build",
-    "scd2_state_intervals",
-    "table_constraint_audit",
-    "events_pivot_daily",
-    "events_cube_counts",
-    "inverted_phrase_query_10x",
-    "ab_wilson_readout",
-    "leakage_free_split",
-    "quantile_normalize_scores",
-    "zorder_rewrite_plan",
-    "slo_burn_alerts",
-    # round-10 additions: postings store probes, composed maintenance,
-    # rollup grouping sets, SemDeDup Arrow rollup, sqrt-token mixture
-    "inverted_store_probe",
-    "inverted_store_incremental",
-    "maintenance_compact_zorder",
-    "events_rollup_counts",
-    "semdedup_cell_rollup",
-    "mixture_temperature_plan",
-    "ewma_daily_close",
-    "filtered_ivf_top10",
-    "ann_multiprobe_top5",
-    "ann_store_multiprobe",
-    "scd2_asof_enrichment",
-    "compact_execute_groups",
-    "top_domains_other",
-    "crawl_worker_schedule",
-    "salted_join_rollup",
-    "sft_mask_rollup",
-    "semdedup_incremental",
-    "hll_set_algebra",
-    "semdedup_cell_rollup_10x",
-    "value_percentiles",
-    # round-11 debuts: packing, streaming twins, maintenance plans,
-    # label/privacy/balance audits, ranking evals, containment dedup
-    "sft_pack_batches",
-    "stream_hll_registers_twin",
-    "ivf_migration_plan",
-    "range_partition_plan",
-    "moments_merge_daily",
-    "annotator_kappa",
-    "kanonymity_audit",
-    "precedence_merge",
-    "cdc_snapshot_compact",
-    "seasonal_hod_profile",
-    "retrieval_mrr",
-    "weighted_priority_sample",
-    "benford_price_audit",
-    "gini_source_balance",
-    "rbo_prefix_stability",
-    "containment_subset_pairs",
-    "stream_topk_counts_twin",
-    "cluster_precision_audit",
-    "containment_store_probe",
-    "cluster_survivor_rollup",
-    "classifier_pr_curve",
-    "simhash_neardup_pairs",
-    # round-12 debuts: composed 3-channel eval-decontamination report,
-    # containment family 10x load twin
-    "decontam_channel_report",
-    "containment_subset_pairs_10x",
-    "stream_decontam_hits_twin",
-    "source_datacard",
-    "krippendorff_alpha",
-    "decontam_removal_plan",
-    "multiclass_f1_report",
-    # round-13 debuts: the source x eval-set contamination matrix, the
-    # streaming cosine decontam twin, Kneser-Ney smoothing, the blocked
-    # fuzzy-linkage family (+10x linear-scaling twin, streaming twin),
-    # Bradley-Terry preference strengths
-    # (fuzzy_store_probe is driver-gated but not benched: a scratch-dir
-    # store WRITE per run, like the other build/workflow checks)
-    "contamination_matrix",
-    "stream_cosine_decontam_twin",
-    "lm_kneser_ney",
-    "fuzzy_blocked_matches",
-    "fuzzy_blocked_matches_10x",
-    "stream_fuzzy_probe_twin",
-    "bradley_terry_strengths",
-    "attribution_report",
-    "conformal_coverage",
-    "ldiversity_audit",
-    "zipf_rank_frequency_fit",
-    "domain_hits",
-    "cuped_readout",
-    "km_user_survival",
-    "psi_length_drift",
-    # (simhash_store_probe / stream_simhash_probe_twin are driver-gated
-    # but not benched: scratch-dir store WRITES per run)
-    "attribution_report_10x",
-    "mannwhitney_length_shift",
-    "chisq_lang_source",
-    "trimmed_location_by_source",
-]
-
 
 # Union of every query name that ever appeared in a PARSED driver bench
 # artifact (BENCH_r01–r06's `parsed.queries`; r07+ were unparseable).
@@ -401,137 +94,6 @@ DRIVER_SUBSET = LINE_ROWS + [
 
 # The stable longitudinal metric: the original r1 headline rows.
 _HEADLINE24 = LINE_ROWS[:24]
-
-
-def _ever_gated_names() -> list[str]:
-    """Union of every committed driver CORRECTNESS artifact's keys — the
-    set of checks that ever earned a driver gate row.  Bench coverage ==
-    gate coverage (r10 verdict): the 2× regression gate can only see a
-    query it times, so every ever-gated check gets a bench row; names
-    not in the live registry (renamed/retired) are filtered by the
-    caller."""
-    import glob as _glob
-
-    names: set[str] = set()
-    pat = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "CORRECTNESS_r*.json"
-    )
-    for f in sorted(_glob.glob(pat)):
-        try:
-            with open(f) as fh:
-                names |= set(json.load(fh).keys())
-        except Exception:
-            pass
-    return sorted(names)
-
-_SMALL_RESULT = {
-    "value_percentiles",
-    "hll_set_algebra",
-    "semdedup_cell_rollup_10x",
-    "ewma_daily_close",
-    "filtered_ivf_top10",
-    "ann_multiprobe_top5",
-    "ann_store_multiprobe",
-    "scd2_asof_enrichment",
-    "compact_execute_groups",
-    "top_domains_other",
-    "crawl_worker_schedule",
-    "salted_join_rollup",
-    "semdedup_incremental",
-    "inverted_store_probe",
-    "inverted_store_incremental",
-    "semdedup_cell_rollup",
-    "mixture_temperature_plan",
-    "events_rollup_counts",
-    "q3_top_revenue_orders",
-    "stac_items_page",
-    "knn_cosine_top10",
-    "stamp_checksum",
-    "ann_lsh_top5",
-    "vector_query_page",
-    "stac_items_keyset",
-    "thermal_point_query",
-    "stac_collection_doc",
-    "stream_dedup_twin",
-    "sq8_adc_top10",
-    "pq_adc_top10",
-    "ivfpq_adc_top10",
-    "audio_fp_neardup",
-    "embedding_eval_decontam",
-    "temperature_mixture_budgets",
-    "push_bloom_classify",
-    "ivfpq_residual_top10",
-    "push_bloom_classify_large",
-    "domain_quality_rollup",
-    "domain_cap_sample",
-    "domain_capped_budgets",
-    "mixture_quota_twophase",
-    "audio_fp_incremental",
-    "cluster_quality_keep",
-    "image_dhash_incremental",
-    "ivfpq_rerank_top10",
-    "curation_pipeline_rollup",
-    "video_fp_neardup",
-    "dsir_resample_topk",
-    "url_blocklist_hosts",
-    "warc_text_extract",
-    "image_text_alignment",
-    "length_quantiles_exact",
-    "stream_url_dedup_twin",
-    "unicode_normalize_corpus",
-    "domain_pagerank",
-    "langid_nb_predictions",
-    "webdataset_roundtrip",
-    "crawl_entry_rollup",
-    # r11 small-result debuts: plans, rollups, leaderboards, samples
-    "sft_pack_batches",
-    "stream_hll_registers_twin",
-    "ivf_migration_plan",
-    "range_partition_plan",
-    "moments_merge_daily",
-    "annotator_kappa",
-    "kanonymity_audit",
-    "precedence_merge",
-    "cdc_snapshot_compact",
-    "seasonal_hod_profile",
-    "retrieval_mrr",
-    "weighted_priority_sample",
-    "benford_price_audit",
-    "gini_source_balance",
-    "rbo_prefix_stability",
-    "stream_topk_counts_twin",
-    "cluster_precision_audit",
-    "containment_store_probe",
-    "cluster_survivor_rollup",
-    "classifier_pr_curve",
-    "simhash_neardup_pairs",
-    "decontam_channel_report",
-    "containment_subset_pairs_10x",
-    "stream_decontam_hits_twin",
-    "source_datacard",
-    "krippendorff_alpha",
-    "decontam_removal_plan",
-    "multiclass_f1_report",
-    # r13 small-result debuts
-    "contamination_matrix",
-    "stream_cosine_decontam_twin",
-    "fuzzy_blocked_matches",
-    "fuzzy_blocked_matches_10x",
-    "stream_fuzzy_probe_twin",
-    "bradley_terry_strengths",
-    "attribution_report",
-    "conformal_coverage",
-    "ldiversity_audit",
-    "zipf_rank_frequency_fit",
-    "domain_hits",
-    "cuped_readout",
-    "km_user_survival",
-    "psi_length_drift",
-    "attribution_report_10x",
-    "mannwhitney_length_shift",
-    "chisq_lang_source",
-    "trimmed_location_by_source",
-}
 
 
 _SPOT_COPIES = 10
@@ -665,9 +227,51 @@ def _scale_spot_main(spark, sf_dir: str, cpus: int) -> None:
     print(record, flush=True)
 
 
+def time_row(spark, chk, sf_dir: str) -> float:
+    """Steady-state seconds of one registry check: one UNTIMED warm run
+    at the measured SF (footers, codegen, shuffle files), then best-of-3
+    — local-mode block-manager cleanup occasionally stalls one task for
+    seconds mid-sequence, and min-of-2 was noisy enough that
+    round-over-round deltas needed manual re-probes.
+
+    EVERY run, the warm one included, starts with the cross-call caches
+    dropped, so each timed run materializes its own barrier persists
+    from the parquet inputs instead of reading the warm run's."""
+    from dronedb_spark.tables import reset_run_cache
+
+    def run_once() -> float:
+        reset_run_cache(spark)
+        t0 = time.time()
+        df = chk.spark_fn(spark, sf_dir)
+        if chk.small:
+            df.collect()
+        else:
+            df.write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+
+    run_once()
+    runs = [run_once(), run_once(), run_once()]
+    best = min(runs)
+    # Local-mode scheduler hiccups dominate short queries.  ADAPTIVE
+    # extra min-runs: only a short row whose three runs already disagree
+    # (spread > 1.25x) pays for two more — stable rows add nothing, so
+    # the full pass stays inside its budget (an unconditional best-of-5
+    # pushed the wall past 50 minutes).
+    if best < 2.0 and max(runs) > 1.25 * best:
+        best = min(best, run_once(), run_once())
+    # Stall insurance: a sustained host-level hiccup can inflate several
+    # consecutive runs (observed: q1 at 8.5s across 3 runs, steady-state
+    # 0.9s); retry up to 2 extra times while the best still looks stalled.
+    extra = 0
+    while best > 2.5 and extra < 2:
+        best = min(best, run_once())
+        extra += 1
+    return best
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
     from dronedb_spark.session import get_spark
     from dronedb_spark.suite import load_all
@@ -682,25 +286,14 @@ def main() -> None:
     registry = load_all()
 
     if full:
-        # Builder pass: every ever-gated check missing from the curated
-        # list is appended (in name order, AFTER it, so committed
-        # per-query history lines up) — bench coverage == gate coverage.
-        rows = list(HEADLINE)
-        seen = set(rows)
-        for name in _ever_gated_names():
-            if name not in seen and name in registry:
-                rows.append(name)
-                seen.add(name)
+        # Builder pass: the whole registry, in registry order.
+        rows = list(registry)
     else:
         # Driver pass: the curated family-coverage subset, bounded wall.
         rows = [n for n in DRIVER_SUBSET if n in registry]
 
-    # Warm-up: JVM JIT + whole-stage-codegen class cache.  The old global
-    # per-query warm pass at sf0.001 is gone: every row already takes an
-    # UNTIMED warm run at the measured SF immediately before its timed
-    # runs (footers, codegen, shuffle files — per-row, where it matters),
-    # so the global pass only duplicated ~10 minutes of wall on the
-    # 384-row registry without changing any steady-state number.
+    # Warm-up: JVM JIT + whole-stage-codegen class cache.  Every row also
+    # takes its own untimed warm run at the measured SF (``time_row``).
     spark.range(1000).count()
 
     # Start the timed loop from a clean session: any persisted barriers,
@@ -717,85 +310,11 @@ def main() -> None:
     except Exception:
         pass
 
-    # Last recorded per-query seconds (the newest committed BENCH_r*.json
-    # artifact, when parseable): the steady-state reference for the
-    # relative stall retry below.  A recorded time PROVES the plan can
-    # run that fast on this host; a transient external-load window (the
-    # sandbox host has them — observed common-row inflation 1.2-1.35x
-    # across back-to-back runs of unchanged code) must not fake a
-    # regression in the round artifact.
-    baseline: dict[str, float] = {}
-    try:
-        import glob
-        import re as _re
-
-        arts = sorted(glob.glob(os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "BENCH_r*.json")))
-        if arts:
-            raw = open(arts[-1]).read()
-            for k, v in _re.findall(r'"([a-z0-9_]+)":\s*([0-9.]+)', raw):
-                # Allowlist from the live registry: old artifacts can embed
-                # non-query floats (truncated "tail" blobs, renamed keys) —
-                # only a name that is a registered check today may seed the
-                # stall-retry baseline.
-                if k in registry:
-                    baseline[k] = float(v)
-    except Exception:
-        baseline = {}
-
-    # One UNTIMED warm pass at the measured SF, then best-of-3: local-mode
-    # block-manager cleanup occasionally stalls one task for seconds
-    # mid-sequence, and min-of-2 was noisy enough that round-over-round
-    # deltas needed manual re-probes (r5 verdict: dedup_minhash recorded
-    # 0.196→0.610 across rounds with unchanged code).  The minimum of three
-    # warm runs is the steady-state number a cluster would see.
     results: dict[str, float] = {}
     total = 0.0
     t_start = time.time()
     for name in rows:
-        chk = registry[name]
-        def run_once() -> float:
-            # EVERY run — the untimed warm one included — starts with the
-            # cross-call caches dropped, so each timed run materializes
-            # its own barrier persists from the parquet inputs.  Without
-            # this, a warm run would leave its persisted subtrees in the
-            # module-level barrier LRU and the timed runs would measure a
-            # cached read instead of the computation (r13 measurement-
-            # honesty fix; the warm run still buys JIT/codegen/footers).
-            reset_run_cache(spark)
-            t0 = time.time()
-            df = chk.spark_fn(spark, sf_dir)
-            if name in _SMALL_RESULT:
-                df.collect()
-            else:
-                df.write.format("noop").mode("overwrite").save()
-            return time.time() - t0
-
-        run_once()  # warm at the measured SF (footers, codegen, shuffles)
-        runs = [run_once(), run_once(), run_once()]
-        best = min(runs)
-        # Sub-2s rows showed 2-3x cross-snapshot oscillation (r11 verdict
-        # #5: dedup_neardup_pairs 0.54/1.77/0.73 s across three committed
-        # snapshots of unchanged code) — local-mode scheduler hiccups
-        # dominate short queries.  ADAPTIVE extra min-runs: only a short
-        # row whose three runs already disagree (spread > 1.25x) pays for
-        # two more — stable rows add nothing, so the full 384-row pass
-        # stays inside the driver's bench budget (an unconditional
-        # best-of-5 pushed the wall past 50 minutes).
-        if best < 2.0 and max(runs) > 1.25 * best:
-            best = min(best, run_once(), run_once())
-        # environment stall insurance, absolute AND relative: a sustained
-        # host-level hiccup can inflate several consecutive runs
-        # (observed: q1 at 8.5s across 3 runs, steady-state 0.9s); retry
-        # up to 2 extra times while the best still looks stalled — either
-        # in absolute terms or vs the last recorded time for this query —
-        # so one noisy window can't fake a regression in the round bench
-        ref = baseline.get(name)
-        extra = 0
-        while (best > 2.5 or (ref is not None and best > 1.6 * ref)) and extra < 2:
-            best = min(best, run_once())
-            extra += 1
-        results[name] = round(best, 3)
+        results[name] = round(time_row(spark, registry[name], sf_dir), 3)
         total += results[name]
         # Per-row progress on stderr: a driver timeout becomes
         # diagnosable (which row was running), and everything prints

@@ -150,6 +150,7 @@ def execute_compaction(
 
 @check(
     "compact_execute_groups",
+    small=True,
     oracle=f"""
         WITH slices AS (
             SELECT l_orderkey % 40 AS slice, COUNT(1) AS n_rows

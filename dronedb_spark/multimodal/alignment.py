@@ -158,6 +158,7 @@ def _al_cells(i: int) -> list[int]:
 
 @check(
     "image_text_alignment",
+    small=True,
     oracle=f"""
         WITH px AS (
             SELECT i.i AS id, y.y // 4 AS by, x.x // 4 AS bx,

@@ -419,6 +419,7 @@ def _gen_afp_wav(ids: DataFrame, n_base: int) -> DataFrame:
 
 @check(
     "audio_fp_neardup",
+    small=True,
     oracle=_afp_pairs_sql(3 * _AFP_GROUPS, 3 * _AFP_GROUPS, _AFP_MAX_DF)
     + """
         SELECT aud_a, aud_b, hamming, n_sub_matches
@@ -494,6 +495,7 @@ _AFP_INC_IDS = (
 
 @check(
     "audio_fp_incremental",
+    small=True,
     oracle=f"""
         WITH {_afp_subs_generic_sql(_AFP_INC_IDS)},
         dsubs AS (SELECT DISTINCT aud, sub FROM subs),

@@ -340,6 +340,7 @@ _PH_INC_IDS = (
 
 @check(
     "image_dhash_incremental",
+    small=True,
     oracle=f"""
         WITH px AS (
             SELECT i.i AS img, y.y AS y, x.x AS x,

@@ -155,6 +155,7 @@ def _vf_frame(i: int, f: int) -> np.ndarray:
 
 @check(
     "video_fp_neardup",
+    small=True,
     oracle=f"""
         WITH px AS (
             SELECT i.i AS vid, f.f AS f, y.y AS y, x.x AS x,

@@ -277,7 +277,7 @@ _CUPED_ORACLE = f"""
     GROUP BY 1, th.theta, th.x_bar ORDER BY variant"""
 
 
-@check("cuped_readout", oracle=_CUPED_ORACLE)
+@check("cuped_readout", small=True, oracle=_CUPED_ORACLE)
 def q_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance-reduced variant means next to the Wilson readout:
     pre-2024-02-01 activity is the covariate, post-period purchase value

@@ -139,6 +139,7 @@ def attribution_report(events: DataFrame) -> DataFrame:
 
 @check(
     "attribution_report",
+    small=True,
     oracle="""
         WITH ev AS (
             SELECT user_id, event_id, ts, event_type FROM events
@@ -218,6 +219,7 @@ def inflated_events(events: DataFrame, copies: int = _AT10_COPIES) -> DataFrame:
 
 @check(
     "attribution_report_10x",
+    small=True,
     oracle=f"""
         WITH ev AS (
             SELECT user_id, event_id, ts, event_type FROM events

@@ -62,6 +62,7 @@ def benford_digit_audit(df: DataFrame, amount_col: str) -> DataFrame:
 
 @check(
     "benford_price_audit",
+    small=True,
     oracle="""
         WITH digits AS (
             SELECT CAST(substr(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit

@@ -187,7 +187,7 @@ def _bloom_oracle() -> str:
         FROM scored ORDER BY hash"""
 
 
-@check("push_bloom_classify", oracle=_bloom_oracle())
+@check("push_bloom_classify", small=True, oracle=_bloom_oracle())
 def q_push_bloom_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Bloom screen over the push fixture: the oracle re-derives the
     filter SIZE from its own distinct count (m = 2048 here — the floor)
@@ -230,6 +230,7 @@ _LARGE_CLIENT_SPARK = (
 
 @check(
     "push_bloom_classify_large",
+    small=True,
     oracle=f"""
         WITH server AS ({_LARGE_SERVER_DUCK}), client AS ({_LARGE_CLIENT_DUCK}),
         {_bloom_classify_sql("server", "client")}

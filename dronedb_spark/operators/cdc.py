@@ -76,6 +76,7 @@ def cdc_compaction_rollup(events: DataFrame, n_keys: int = N_KEYS) -> DataFrame:
 
 @check(
     "cdc_snapshot_compact",
+    small=True,
     oracle=f"""
         WITH changes AS (
             SELECT CAST(user_id % {N_KEYS} AS BIGINT) AS key,

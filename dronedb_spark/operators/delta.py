@@ -145,6 +145,7 @@ def q_apply_delta_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "stamp_checksum",
+    small=True,
     oracle=with_catalog(
         """SELECT sha256(
                  COALESCE((SELECT string_agg(path || hash, '' ORDER BY path) FROM entries), '')

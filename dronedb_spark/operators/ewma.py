@@ -80,6 +80,7 @@ def ewma_daily_close(events: DataFrame) -> DataFrame:
 
 @check(
     "ewma_daily_close",
+    small=True,
     oracle=f"""
         WITH RECURSIVE b AS (
             SELECT event_type,

@@ -59,6 +59,7 @@ def value_percentiles(events: DataFrame, pcts=PCTS) -> DataFrame:
 
 @check(
     "value_percentiles",
+    small=True,
     oracle=f"""
         WITH v AS (
             SELECT event_type,

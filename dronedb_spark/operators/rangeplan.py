@@ -57,6 +57,7 @@ def range_partition_plan(
 
 @check(
     "range_partition_plan",
+    small=True,
     oracle=f"""
         WITH fact AS (
             SELECT CASE WHEN user_id % 10 < 7 THEN 0

@@ -203,6 +203,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "q3_top_revenue_orders",
+    small=True,
     oracle="""
         SELECT o_orderkey, o_orderpriority,
                CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(14,2)) * (CAST(1 AS DECIMAL(6,4)) - CAST(l_discount AS DECIMAL(6,4)))), 2) AS DOUBLE) AS revenue

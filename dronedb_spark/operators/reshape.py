@@ -162,6 +162,7 @@ def rollup_counts(events: DataFrame) -> DataFrame:
 
 @check(
     "events_rollup_counts",
+    small=True,
     oracle="""
         WITH base AS (
             SELECT event_type,

@@ -73,6 +73,7 @@ def salted_join(
 
 @check(
     "salted_join_rollup",
+    small=True,
     oracle="""
         WITH dim AS (
             SELECT DISTINCT user_id % 50 AS hot_key,

@@ -163,6 +163,7 @@ def scd2_asof_enrichment(events: DataFrame, state: Column) -> DataFrame:
 
 @check(
     "scd2_asof_enrichment",
+    small=True,
     oracle=f"""
         WITH base AS (
             SELECT user_id AS k, epoch_us(ts) AS t_us, event_id,

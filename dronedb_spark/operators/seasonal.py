@@ -60,6 +60,7 @@ def seasonal_profile(events: DataFrame) -> DataFrame:
 
 @check(
     "seasonal_hod_profile",
+    small=True,
     oracle=f"""
         WITH b AS (
             SELECT event_type,

@@ -113,6 +113,7 @@ _ORACLE_FILTER = f"""
 
 @check(
     "stac_items_page",
+    small=True,
     oracle=with_catalog(
         f"""SELECT path, type,
                    CASE WHEN capture_ms > 0
@@ -168,6 +169,7 @@ def stac_items_keyset(
 
 @check(
     "stac_items_keyset",
+    small=True,
     oracle=with_catalog(
         f"""SELECT path, type,
                    CASE WHEN capture_ms > 0
@@ -356,6 +358,7 @@ def stac_collection_doc(
 
 @check(
     "stac_collection_doc",
+    small=True,
     oracle=with_catalog(
         """SELECT 'ds' AS collection_id,
                   CAST(n_items AS BIGINT) AS n_items,

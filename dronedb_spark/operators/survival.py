@@ -144,7 +144,7 @@ _KM_ORACLE = f"""
     FROM at_risk ORDER BY t_day"""
 
 
-@check("km_user_survival", oracle=_KM_ORACLE)
+@check("km_user_survival", small=True, oracle=_KM_ORACLE)
 def q_km_user_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Kaplan-Meier user-lifetime curve with 7-day right-censoring:
     at-risk counts, events, censored counts, and the product-limit

@@ -82,6 +82,7 @@ def moments_merge_daily(events: DataFrame) -> DataFrame:
 
 @check(
     "moments_merge_daily",
+    small=True,
     oracle=f"""
         WITH ev AS (
             SELECT CAST(epoch_us(ts) // {_DAY_US} AS BIGINT) AS day,

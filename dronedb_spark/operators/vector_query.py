@@ -101,6 +101,7 @@ _BBOX = (-110.0, 32.0, -95.0, 42.0)
 
 @check(
     "vector_query_page",
+    small=True,
     oracle=f"""
         WITH features AS ({FEATURES_SQL})
         SELECT dataset_id, layer, fid, geom_type,

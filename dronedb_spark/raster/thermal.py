@@ -97,6 +97,7 @@ _POINTS = [(0, 0), (3, 5), (10, 60), (32, 32), (63, 63)]
 
 @check(
     "thermal_point_query",
+    small=True,
     oracle=f"""
         WITH raw AS ({raw_sql('duckdb')})
         SELECT row, col, raw,

@@ -391,6 +391,7 @@ def q_warc_record_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "warc_text_extract",
+    small=True,
     oracle=f"""
         WITH ids AS (SELECT unnest(range(0, {_WC_N})) AS fid),
         js AS (SELECT unnest(range(0, {_WC_M})) AS j),

@@ -187,6 +187,7 @@ def _wd_caption(i: int) -> str:
 
 @check(
     "webdataset_roundtrip",
+    small=True,
     oracle=f"""
         WITH ids AS (SELECT unnest(range(0, {_WD_N})) AS i),
         samples AS (

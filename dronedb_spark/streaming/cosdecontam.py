@@ -117,6 +117,7 @@ def stream_cosine_probe(
 
 @check(
     "stream_cosine_decontam_twin",
+    small=True,
     oracle=f"""
         WITH ev AS (
             SELECT CAST((vec_id // {EVAL_EVERY}) % {N_SETS} AS INT) AS set_id,

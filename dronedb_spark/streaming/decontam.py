@@ -41,6 +41,7 @@ def stream_decontam_probe(
 
 @check(
     "stream_decontam_hits_twin",
+    small=True,
     oracle="""
         WITH bench AS (
             SELECT doc_id, CAST((doc_id // 17) % 3 AS INT) AS set_id, text

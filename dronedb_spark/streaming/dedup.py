@@ -42,6 +42,7 @@ def _register_check() -> None:
 
     @check(
         "stream_dedup_twin",
+        small=True,
         oracle="""
             WITH k AS (
                 SELECT source, doc_id,
@@ -184,6 +185,7 @@ def _register_url_check() -> None:
 
     @check(
         "stream_url_dedup_twin",
+        small=True,
         oracle=f"""
             WITH urls AS (SELECT doc_id, source, {_D_URL} AS url FROM documents),
             {_D_PARTS},

@@ -51,7 +51,7 @@ _TWIN_ORACLE = _MATCH_ORACLE.replace(
 assert _TWIN_ORACLE != _MATCH_ORACLE  # the replace must have matched
 
 
-@check("stream_fuzzy_probe_twin", oracle=_TWIN_ORACLE)
+@check("stream_fuzzy_probe_twin", small=True, oracle=_TWIN_ORACLE)
 def q_stream_fuzzy_probe_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The probe's batch twin (identical code path): the edit-distance
     histogram of all match triples — pair count and distinct probes per

@@ -93,6 +93,7 @@ def hll_register_trajectory(events: DataFrame) -> DataFrame:
 
 @check(
     "stream_hll_registers_twin",
+    small=True,
     oracle=f"""
         WITH ev AS (
             SELECT CAST(user_id AS VARCHAR) AS k,

@@ -90,6 +90,7 @@ def topk_trajectory(events: DataFrame, k: int = TOP_K) -> DataFrame:
 
 @check(
     "stream_topk_counts_twin",
+    small=True,
     oracle=f"""
         WITH ev AS (
             SELECT user_id,

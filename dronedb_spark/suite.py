@@ -1,12 +1,28 @@
 """Registry of (named query, DuckDB oracle SQL) pairs — the driver contract.
 
 Each operator module registers its parity checks here via the ``check``
-decorator.  ``__spark_entry__.py`` exposes the registry to the driver.
+decorator.  ``load_all()`` discovers those modules by walking the
+package, so a new module registers its checks without being listed
+anywhere.  ``__spark_entry__.py`` exposes the registry to the driver,
+which gates the first checks in registry order under a fixed budget.
+The order comes from the driver's ``CORRECTNESS_r<N>.json`` ledgers
+beside the package: checks gated longest ago (never-gated first) lead,
+so each round's window rotates onto the least recently gated checks.
+
+The oracle comparison (``rows_key`` / ``compare_rows``) lives here too,
+shared by ``tests/test_parity.py`` and ``tools/simcheck.py``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import decimal
+import importlib
+import json
+import math
+import os
+import pkgutil
+import re
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,296 +33,90 @@ class Check:
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL; None → driver does rows-only check
+    small: bool = False  # bench collects the result instead of a noop write
 
 
 REGISTRY: dict[str, Check] = {}
 
 
-def check(name: str, oracle: str | None = None):
+def check(name: str, oracle: str | None = None, small: bool = False):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = Check(name, fn, oracle)
+        REGISTRY[name] = Check(name, fn, oracle, small)
         return fn
 
     return deco
 
 
-# Round-13 gating order under the driver's HARD 50-check budget
-# (every CORRECTNESS_r0* holds exactly 50 rows).  Slots 1-2 are the two
-# r12-verdict oracle-defect re-gates: gini_source_balance (its DuckDB
-# oracle summed BIGINT into HUGEINT -> pandas float64 render mismatch;
-# fixed with CAST(SUM(mass) AS BIGINT), balance.py) and
-# setexif_gps_roundtrip (its oracle's outer projection read lon, lat in
-# swapped order; fixed to lat, lon, workflow_check.py).  Slots 3-26 are
-# the r13 window the r12 verdict names verbatim (item #4): the
-# never-re-gated section-2 band plus the r1 core, un-refreshed since
-# r11.  Slots 27-48 are the 22 round-13 debuts (each oracle-checked and
-# pytest-pinned before entering the window), and the last 2 slots start
-# the oldest last-green band (checks last gated in round 2 — the
-# rotation's tail, continuing below the budget line into round 14).
-_ROUND13_PRIORITY = [
-    # --- oracle-defect re-gates (r12 verdict #2 / #3) -------------------
-    "gini_source_balance",           # CAST(SUM(mass) AS BIGINT) fix
-    "setexif_gps_roundtrip",         # oracle lat/lon projection order fix
-    # --- r13 window per r12 verdict #4 (suite.py budget line, verbatim) -
-    "colormap_gray_hist", "contour_crossings",
-    "copc_zorder_pages",
-    "embedding_neardup_pairs", "embedding_norm_stats",
-    "formula_engine_sweep", "formula_ndvi_vari_stats",
-    "q1_pricing_summary", "q2_min_cost_supplier", "q4_order_priority",
-    "q5_region_revenue", "q6_forecast_revenue",
-    "dataset_counts", "temporal_extent", "spatial_extent",
-    "entries_meta_join", "entry_info", "tag_parse", "status_classify",
-    "delta_adds", "delta_removes", "apply_delta_classify",
-    "catalog_list_folder", "meta_rollup",
-    # --- r13 debuts (registered this round, oracle-checked) -------------
-    "contamination_matrix",          # source x eval-set leakage grain
-    "stream_cosine_decontam_twin",   # third decontam channel's runtime
-    "lm_kneser_ney",                 # the published KenLM smoothing
-    "fuzzy_blocked_matches",         # entity-resolution family debut
-    "fuzzy_store_probe",             # ... its block-partitioned store
-    "fuzzy_blocked_matches_10x",     # ... linear-scaling probe twin
-    "stream_fuzzy_probe_twin",       # ... arrival-time runtime
-    "bradley_terry_strengths",       # preference-eval MM fit
-    "attribution_report",            # multi-touch conversion credit
-    "conformal_coverage",            # split-conformal calibration
-    "ldiversity_audit",              # k-anonymity's diversity sibling
-    "zipf_rank_frequency_fit",       # per-source power-law OLS audit
-    "domain_hits",                   # integerized Kleinberg HITS
-    "cuped_readout",                 # CUPED variance-reduced readout
-    "km_user_survival",              # Kaplan-Meier retention curve
-    "psi_length_drift",              # population stability index
-    "simhash_store_probe",           # simhash family store + probe
-    "stream_simhash_probe_twin",     # ... its arrival-time runtime
-    "attribution_report_10x",        # events-path linear-scaling twin
-    "mannwhitney_length_shift",      # histogram-exact rank-sum U
-    "chisq_lang_source",             # contingency independence
-    "trimmed_location_by_source",    # exact robust location
-    # --- back-fill band: every remaining check last gated in round 2 ----
-    "geoproject_identity_grid", "haversine_to_origin",
-    # ================= 50-slot budget line (r14 window starts here) ====
-    "ingest_format_props", "ivf_cell_counts", "ivf_kmeans_cells",
-    "ivf_search_top5", "knn_cosine_top10", "las_catalog_tile_counts",
-    "mask_border_interiors", "multiraster_area_stats",
-    "multispectral_align_merge", "mvt_zoom_budget",
-    "overview_pyramid", "pointcloud_tile_raster", "raster_band_stats",
-    "raster_point_query",
-    "raster_tiff_stats", "spatial_join_counts", "text_simhash",
-    "tiff_catalog_area_stats", "tile_pyramid_counts", "vector_describe",
-    "vector_query_page", "webmercator_tiles_z12",
-    "zonal_volume_bestfit", "zonal_volume_cutfill",
-    # r3 band next: align_similarity_recovery, audio_features,
-    # codec_extended_formats, dedup_corpus_segments_10x, the TPC-H
-    # q7-q22 originals, dxf/fgb/geojson/kml parsers, nested rollup ...
-]
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_LEDGER = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def last_gated(root: str = _ROOT) -> dict[str, int]:
+    """Check name -> newest round N whose ``CORRECTNESS_r<N>.json`` in
+    ``root`` holds it.  A ledger that is not a JSON object keyed by
+    check name raises ``ValueError`` naming the file."""
+    last: dict[str, int] = {}
+    for fn in sorted(os.listdir(root)):
+        m = _LEDGER.fullmatch(fn)
+        if m is None:
+            continue
+        path = os.path.join(root, fn)
+        try:
+            with open(path) as fh:
+                rows = json.load(fh)
+        except ValueError as e:
+            raise ValueError(f"malformed gate ledger {path}: {e}") from e
+        if not isinstance(rows, dict):
+            raise ValueError(f"malformed gate ledger {path}: not an object keyed by check name")
+        rnd = int(m.group(1))
+        for name in rows:
+            last[name] = max(last.get(name, 0), rnd)
+    return last
 
 
 def load_all() -> dict[str, Check]:
-    """Import every operator module so its checks register, then reorder
-    the registry so the checks that still need a driver CORRECTNESS row
-    (``_ROUND13_PRIORITY``) come first — the driver walks in order under a
-    ~50-check budget and the already-green families can cede their slots.
-    """
-    # --- never-gated in round 1: register first -------------------------
-    import dronedb_spark.sources.decode_checks  # noqa: F401  (real codecs, new in r2)
-    import dronedb_spark.sources.bridge  # noqa: F401  (file→operator bridges, new in r2)
-    import dronedb_spark.raster.stats  # noqa: F401
-    import dronedb_spark.raster.volume  # noqa: F401
-    import dronedb_spark.raster.contours  # noqa: F401
-    import dronedb_spark.raster.stockpile  # noqa: F401
-    import dronedb_spark.raster.points  # noqa: F401
-    import dronedb_spark.raster.colormaps  # noqa: F401
-    import dronedb_spark.raster.align  # noqa: F401
-    import dronedb_spark.raster.geoproject  # noqa: F401
-    import dronedb_spark.raster.thermal  # noqa: F401
-    import dronedb_spark.vectors.knn  # noqa: F401
-    import dronedb_spark.vectors.ann  # noqa: F401
-    import dronedb_spark.vectors.ivf  # noqa: F401
-    import dronedb_spark.text.simhash  # noqa: F401
-    import dronedb_spark.functions.geo  # noqa: F401
-    import dronedb_spark.functions.mvt  # noqa: F401
-    import dronedb_spark.operators.spatial  # noqa: F401
-    import dronedb_spark.functions.footprint  # noqa: F401
-    import dronedb_spark.multimodal.media  # noqa: F401
-    import dronedb_spark.streaming.stateful  # noqa: F401
-    import dronedb_spark.text.quality  # noqa: F401  (sampling checks)
-    import dronedb_spark.text.pii  # noqa: F401
-    import dronedb_spark.text.decontam  # noqa: F401
-    import dronedb_spark.sources.ingest_check  # noqa: F401  (EXIF ingest)
-    import dronedb_spark.sources.geojson  # noqa: F401  (S8 real decode, new in r2)
-    import dronedb_spark.sources.shapefile  # noqa: F401  (S8 .shp/.dbf, new in r3)
-    import dronedb_spark.catalog.nested  # noqa: F401  (dataset roll-up, new in r3)
-    import dronedb_spark.sources.kml  # noqa: F401  (S8 KML/KMZ, new in r3)
-    import dronedb_spark.sources.gpkg  # noqa: F401  (S8 GeoPackage, new in r3)
-    import dronedb_spark.sources.sqlite_catalog  # noqa: F401  (S7, new in r3)
-    import dronedb_spark.sources.dxf  # noqa: F401  (S8 DXF, new in r3)
-    import dronedb_spark.sources.fgb  # noqa: F401  (S8 FlatGeobuf, new in r3)
-    import dronedb_spark.sources.copc  # noqa: F401  (K6 real COPC container, new in r4)
-    import dronedb_spark.sources.topojson  # noqa: F401  (S8 TopoJSON, new in r4)
-    import dronedb_spark.sources.sensors  # noqa: F401  (sensor DB chain, new in r4)
-    import dronedb_spark.catalog.workflow_check  # noqa: F401  (W1-W6 lifecycle, new in r4)
-    import dronedb_spark.sources.fingerprint_check  # noqa: F401  (S4 sniffer, new in r4)
-    import dronedb_spark.operators.parquet_sinks  # noqa: F401  (K3/R13 sinks, new in r4)
-    import dronedb_spark.catalog.passwords  # noqa: F401  (W11 verify, new in r4)
-    import dronedb_spark.streaming.dedup  # noqa: F401  (stream-dedup batch twin, new in r4)
-    import dronedb_spark.streaming.joins  # noqa: F401  (stream-stream join twin, new in r4)
-    import dronedb_spark.vectors.quant  # noqa: F401  (SQ8 ADC search, new in r4)
-    import dronedb_spark.sources.gsplat  # noqa: F401  (gaussian-splat decode, new in r4)
-    import dronedb_spark.sources.rjpeg  # noqa: F401  (FLIR R-JPEG thermal, new in r4)
-    import dronedb_spark.functions.sensorprofiles  # noqa: F401  (profiles/presets, new in r4)
-    import dronedb_spark.sources.cog  # noqa: F401  (K5 real COG sink, new in r4)
-    import dronedb_spark.sources.rad  # noqa: F401  (RAD splat-LOD container, new in r4)
-    import dronedb_spark.raster.region  # noqa: F401  (region/index render, new in r4)
-    import dronedb_spark.text.lm  # noqa: F401  (LM perplexity filter, new in r4)
-    import dronedb_spark.text.packing  # noqa: F401  (sequence packing, new in r4)
-    import dronedb_spark.text.bpe  # noqa: F401  (BPE vocab induction, new in r4)
-    import dronedb_spark.text.classifier  # noqa: F401  (linear quality filter, new in r4)
-    import dronedb_spark.vectors.semdedup  # noqa: F401  (cluster-prune dedup, new in r4)
-    import dronedb_spark.vectors.pca  # noqa: F401  (sufficient-statistics PCA, new in r4)
-    import dronedb_spark.raster.tiler  # noqa: F401  (XYZ raster tile render, new in r4)
-    import dronedb_spark.raster.preview  # noqa: F401  (splat thumbnails, new in r4)
-    import dronedb_spark.sources.zonedetect  # noqa: F401  (geo→timezone, new in r4)
-    import dronedb_spark.operators.tpch_ext  # noqa: F401  (Q8-Q21, new in r2)
-    import dronedb_spark.text.winnow  # noqa: F401  (MOSS fingerprints, new in r6)
-    import dronedb_spark.text.sketch  # noqa: F401  (HLL + CMS sketches, new in r6)
-    import dronedb_spark.text.bm25  # noqa: F401  (BM25 relevance, new in r6)
-    import dronedb_spark.multimodal.phash  # noqa: F401  (image dHash near-dup, new in r6)
-    import dronedb_spark.vectors.pq  # noqa: F401  (product-quantization ADC, new in r7)
-    import dronedb_spark.vectors.ivfpq  # noqa: F401  (combined IVF-PQ index, new in r7)
-    import dronedb_spark.multimodal.audiofp  # noqa: F401  (audio fingerprint near-dup, new in r7)
-    import dronedb_spark.text.chunking  # noqa: F401  (overlapping RAG chunking, new in r7)
-    import dronedb_spark.multimodal.scenes  # noqa: F401  (scene-cut detection, new in r7)
-    import dronedb_spark.text.sharding  # noqa: F401  (deterministic shard shuffle, new in r7)
-    import dronedb_spark.multimodal.bucketing  # noqa: F401  (aspect-bucket batches, new in r7)
-    import dronedb_spark.catalog.compact  # noqa: F401  (small-file compaction plan, new in r7)
-    import dronedb_spark.vectors.negatives  # noqa: F401  (hard-negative mining, new in r7)
-    import dronedb_spark.vectors.evalfilter  # noqa: F401  (embedding eval decontam, new in r7)
-    import dronedb_spark.text.mixture  # noqa: F401  (temperature mixture budgets, new in r7)
-    import dronedb_spark.operators.bloom  # noqa: F401  (Bloom sync pre-screen, new in r7)
-    import dronedb_spark.operators.sessions  # noqa: F401  (flight sessions, new in r7)
-    import dronedb_spark.text.substring  # noqa: F401  (arbitrary-boundary substring dedup, new in r8)
-    import dronedb_spark.text.domains  # noqa: F401  (domain-level quality caps, new in r8)
-    import dronedb_spark.text.gopher  # noqa: F401  (Gopher quality rules, new in r8)
-    import dronedb_spark.text.curation  # noqa: F401  (CCNet buckets + cluster survivors, new in r8)
-    import dronedb_spark.multimodal.videofp  # noqa: F401  (per-frame video near-dup, new in r8)
-    import dronedb_spark.text.dsir  # noqa: F401  (DSIR importance resampling, new in r8)
-    import dronedb_spark.text.urls  # noqa: F401  (URL canonicalize/dedup/blocklist, new in r8)
-    import dronedb_spark.sources.warc  # noqa: F401  (WARC/WET web-archive source, new in r8)
-    import dronedb_spark.multimodal.alignment  # noqa: F401  (image-text alignment gate, new in r8)
-    import dronedb_spark.text.lengths  # noqa: F401  (exact length quantiles, new in r8)
-    import dronedb_spark.text.normalize  # noqa: F401  (NFKC unicode cleanup, new in r8)
-    import dronedb_spark.text.linkgraph  # noqa: F401  (domain PageRank, new in r8)
-    import dronedb_spark.text.langid  # noqa: F401  (NB language ID, new in r8)
-    import dronedb_spark.sources.webdataset  # noqa: F401  (WebDataset tar shards, new in r8)
-    import dronedb_spark.sources.jsonl  # noqa: F401  (JSONL.gz interchange, new in r8)
-    import dronedb_spark.text.heavyhitters  # noqa: F401  (Misra-Gries 2-pass, new in r8)
-    import dronedb_spark.text.c4  # noqa: F401  (C4 line/page cleaning, new in r8)
-    import dronedb_spark.text.paradedup  # noqa: F401  (paragraph keep-first dedup, new in r8)
-    import dronedb_spark.vectors.binq  # noqa: F401  (1-bit quantize + rerank, new in r8)
-    import dronedb_spark.text.anchors  # noqa: F401  (anchor-text rollup, new in r8)
-    import dronedb_spark.text.robots  # noqa: F401  (robots.txt verdicts, new in r8)
-    import dronedb_spark.text.webcuration  # noqa: F401  (C4 + line-dedup composition, new in r8)
-    import dronedb_spark.vectors.matryoshka  # noqa: F401  (prefix-budget top-k, new in r8)
-    import dronedb_spark.text.collocations  # noqa: F401  (bigram lift top-k, new in r8)
-    import dronedb_spark.sources.csvio  # noqa: F401  (CSV.gz interchange, new in r8)
-    import dronedb_spark.vectors.drift  # noqa: F401  (drift decile table, new in r8)
-    import dronedb_spark.catalog.datadiff  # noqa: F401  (dataset version diff, new in r8)
-    import dronedb_spark.sources.orcio  # noqa: F401  (ORC interchange, new in r8)
-    import dronedb_spark.operators.resample  # noqa: F401  (time-grid ffill, new in r8)
-    import dronedb_spark.operators.funnel  # noqa: F401  (ordered funnel, new in r8)
-    import dronedb_spark.operators.cohorts  # noqa: F401  (cohort retention, new in r8)
-    import dronedb_spark.operators.outliers  # noqa: F401  (MAD outliers, new in r8)
-    import dronedb_spark.multimodal.whash  # noqa: F401  (WHT frequency hash, new in r8)
-    import dronedb_spark.text.crawlcorpus  # noqa: F401  (crawl-to-corpus funnel, new in r8)
-    import dronedb_spark.catalog.profile  # noqa: F401  (ANALYZE-style stats, new in r8)
-    import dronedb_spark.sources.model_check  # noqa: F401  (S5 Model entry props, new in r9)
-    import dronedb_spark.operators.sessionize  # noqa: F401  (gap sessionization, new in r9)
-    import dronedb_spark.text.corpusstats  # noqa: F401  (saturation/novelty/overlap, new in r9)
-    import dronedb_spark.text.tfidf  # noqa: F401  (rational TF-IDF top terms, new in r9)
-    import dronedb_spark.text.reservoir  # noqa: F401  (deterministic fixed sample, new in r9)
-    import dronedb_spark.text.ssjoin  # noqa: F401  (exact prefix-filter ssjoin, new in r9)
-    import dronedb_spark.text.evalmetrics  # noqa: F401  (exact ROC-AUC + calibration, new in r9)
-    import dronedb_spark.text.invindex  # noqa: F401  (positional phrase query, new in r9)
-    import dronedb_spark.operators.ohlc  # noqa: F401  (candlestick downsample, new in r9)
-    import dronedb_spark.vectors.recalleval  # noqa: F401  (IVF recall calibration, new in r9)
-    import dronedb_spark.text.sitemaps  # noqa: F401  (sitemap -> crawl frontier, new in r9)
-    import dronedb_spark.catalog.zorder  # noqa: F401  (z-order layout + skipping, new in r9)
-    import dronedb_spark.catalog.maintenance  # noqa: F401  (compact+zorder composed plan, new in r10)
-    import dronedb_spark.vectors.semdedup  # noqa: F401  (SemDeDup in-cell near-dup removal, new in r10)
-    import dronedb_spark.text.mixture  # noqa: F401  (sqrt-token mixture plan added r10)
-    import dronedb_spark.operators.ewma  # noqa: F401  (integer EWMA fold, new in r10)
-    import dronedb_spark.vectors.filtered  # noqa: F401  (filtered ANN probe widening, new in r10)
-    import dronedb_spark.operators.salting  # noqa: F401  (skew-salted join, new in r10)
-    import dronedb_spark.text.sft  # noqa: F401  (SFT turn masking, new in r10)
-    import dronedb_spark.operators.percentiles  # noqa: F401  (exact P50/95/99, new in r10)
-    import dronedb_spark.streaming.hll  # noqa: F401  (streaming HLL registers, new in r11)
-    import dronedb_spark.vectors.maintenance  # noqa: F401  (IVF migration plan, new in r11)
-    import dronedb_spark.operators.rangeplan  # noqa: F401  (range layout planning, new in r11)
-    import dronedb_spark.operators.varmerge  # noqa: F401  (mergeable moments, new in r11)
-    import dronedb_spark.text.agreement  # noqa: F401  (Cohen's kappa, new in r11)
-    import dronedb_spark.text.kanon  # noqa: F401  (k-anonymity audit, new in r11)
-    import dronedb_spark.text.precedence  # noqa: F401  (source-precedence merge, new in r11)
-    import dronedb_spark.operators.cdc  # noqa: F401  (CDC snapshot compaction, new in r11)
-    import dronedb_spark.operators.seasonal  # noqa: F401  (seasonal profile, new in r11)
-    import dronedb_spark.vectors.mrr  # noqa: F401  (exact-integer MRR, new in r11)
-    import dronedb_spark.text.wsample  # noqa: F401  (weighted priority sampling, new in r11)
-    import dronedb_spark.operators.benford  # noqa: F401  (Benford first-digit audit, new in r11)
-    import dronedb_spark.text.balance  # noqa: F401  (Gini mixture-balance audit, new in r11)
-    import dronedb_spark.vectors.rbo  # noqa: F401  (rank-biased overlap eval, new in r11)
-    import dronedb_spark.text.containment  # noqa: F401  (asymmetric containment dedup, new in r11)
-    import dronedb_spark.streaming.topk  # noqa: F401  (streaming top-k leaderboard twin, new in r11)
-    import dronedb_spark.text.clusteraudit  # noqa: F401  (LSH cluster precision audit, new in r11)
-    import dronedb_spark.text.decontamreport  # noqa: F401  (composed 3-channel eval report, new in r12)
-    import dronedb_spark.text.datacard  # noqa: F401  (per-source datasheet rollup, new in r12)
-    import dronedb_spark.text.alpha  # noqa: F401  (Krippendorff multi-rater alpha, new in r12)
-    import dronedb_spark.streaming.decontam  # noqa: F401  (streaming n-gram decontam probe, new in r12)
-    import dronedb_spark.text.mclasseval  # noqa: F401  (multiclass F1 report, new in r12)
-    import dronedb_spark.text.contamatrix  # noqa: F401  (source x eval-set leakage matrix, new in r13)
-    import dronedb_spark.streaming.cosdecontam  # noqa: F401  (streaming cosine decontam probe, new in r13)
-    import dronedb_spark.text.fuzzy  # noqa: F401  (blocked fuzzy record linkage, new in r13)
-    import dronedb_spark.streaming.fuzzy  # noqa: F401  (streaming fuzzy probe, new in r13)
-    import dronedb_spark.text.btrank  # noqa: F401  (Bradley-Terry strengths, new in r13)
-    import dronedb_spark.text.conformal  # noqa: F401  (split-conformal coverage, new in r13)
-    import dronedb_spark.operators.attribution  # noqa: F401  (multi-touch attribution, new in r13)
-    import dronedb_spark.text.powerlaw  # noqa: F401  (Zipf rank-frequency OLS, new in r13)
-    import dronedb_spark.operators.survival  # noqa: F401  (Kaplan-Meier retention, new in r13)
-    import dronedb_spark.text.psi  # noqa: F401  (population stability index, new in r13)
-    import dronedb_spark.streaming.simhash  # noqa: F401  (streaming simhash probe, new in r13)
-    import dronedb_spark.text.nonparam  # noqa: F401  (rank-sum U / chi-square / trimmed location, new in r13)
-    # (text.simhash also registers simhash_store_probe; operators.attribution
-    # registers attribution_report_10x)
-    # (text.linkgraph also registers domain_hits; operators.abtest
-    # registers cuped_readout — imported below)
-    # (text.lm also registers lm_kneser_ney; text.kanon registers
-    # ldiversity_audit — imported below)
-    import dronedb_spark.operators.autocorr  # noqa: F401  (rate autocorrelation, new in r9)
-    import dronedb_spark.operators.skewprof  # noqa: F401  (join-skew profile, new in r9)
-    import dronedb_spark.catalog.constraints  # noqa: F401  (constraint audit, new in r9)
-    import dronedb_spark.operators.scd2  # noqa: F401  (SCD2 history build, new in r9)
-    import dronedb_spark.text.preferences  # noqa: F401  (DPO pair construction, new in r9)
-    import dronedb_spark.operators.reshape  # noqa: F401  (pivot/unpivot/cube, new in r9)
-    import dronedb_spark.text.splits  # noqa: F401  (leakage-free splits, new in r9)
-    import dronedb_spark.operators.abtest  # noqa: F401  (Wilson A/B readout, new in r9)
-    import dronedb_spark.text.qnorm  # noqa: F401  (quantile normalization, new in r9)
-    import dronedb_spark.operators.slo  # noqa: F401  (burn-rate alerts, new in r9)
-    # (text.substring also registers substring_dedup_rewrite; text.quality
-    # registers mixture_quota_twophase — imported above)
-    # --- green rows in CORRECTNESS_r01: register after ------------------
-    import dronedb_spark.operators.search  # noqa: F401
-    import dronedb_spark.operators.stats  # noqa: F401
-    import dronedb_spark.operators.meta  # noqa: F401
-    import dronedb_spark.operators.delta  # noqa: F401
-    import dronedb_spark.operators.stac  # noqa: F401
-    import dronedb_spark.operators.relational  # noqa: F401
-    import dronedb_spark.operators.vector_query  # noqa: F401
-    import dronedb_spark.operators.asof  # noqa: F401
-    import dronedb_spark.operators.interval  # noqa: F401
-    import dronedb_spark.functions.strings  # noqa: F401
-    import dronedb_spark.text.dedup  # noqa: F401
-    import dronedb_spark.text.segdedup  # noqa: F401
-    import dronedb_spark.text.repetition  # noqa: F401
+    """Import every module of the ``dronedb_spark`` package so its checks
+    register, then order the registry by (last gated round, name), with
+    never-gated checks as round 0.  The driver walks the registry in
+    order under its ~50-check budget, so the checks that waited longest
+    for a CORRECTNESS row come first."""
+    import dronedb_spark
 
-    ordered = {n: REGISTRY[n] for n in _ROUND13_PRIORITY if n in REGISTRY}
-    ordered.update((n, c) for n, c in REGISTRY.items() if n not in ordered)
+    for mod in pkgutil.walk_packages(dronedb_spark.__path__, "dronedb_spark."):
+        importlib.import_module(mod.name)
+    last = last_gated()
+    ordered = sorted(REGISTRY.values(), key=lambda c: (last.get(c.name, 0), c.name))
     REGISTRY.clear()
-    REGISTRY.update(ordered)
+    REGISTRY.update((c.name, c) for c in ordered)
     return REGISTRY
+
+
+def _norm(v):
+    if isinstance(v, float):
+        return "NaN" if math.isnan(v) else round(v, 9)
+    if isinstance(v, decimal.Decimal):
+        return round(float(v), 9)
+    return v
+
+
+def rows_key(rows, cols: Sequence[str]) -> list[tuple]:
+    """Order-free form of a result: each row's values normalized (floats
+    and decimals rounded to 9 places, NaN made comparable) and taken in
+    column-name order, then the rows sorted."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
+
+
+def compare_rows(s_cols, s_rows, d_cols, d_rows) -> None:
+    """Raise ``AssertionError`` unless the Spark result (``s_*``) equals
+    the oracle's (``d_*``): the same column names in the same order, the
+    same row count and the same values regardless of row order.  A value
+    mismatch lists the first 5 differing rows."""
+    if list(s_cols) != list(d_cols):
+        raise AssertionError(f"columns {list(s_cols)} vs {list(d_cols)}")
+    if len(s_rows) != len(d_rows):
+        raise AssertionError(f"rowcount {len(s_rows)} vs {len(d_rows)}")
+    sk, dk = rows_key(s_rows, s_cols), rows_key(d_rows, d_cols)
+    if sk != dk:
+        diffs = [(a, b) for a, b in zip(sk, dk) if a != b][:5]
+        raise AssertionError(f"value mismatch, first diffs: {diffs}")

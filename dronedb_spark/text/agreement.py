@@ -83,6 +83,7 @@ def cohen_kappa(labels: DataFrame) -> DataFrame:
 
 @check(
     "annotator_kappa",
+    small=True,
     oracle=f"""
         WITH labels AS (
             SELECT doc_id,

@@ -91,6 +91,7 @@ def krippendorff_alpha(ratings: DataFrame) -> DataFrame:
 
 @check(
     "krippendorff_alpha",
+    small=True,
     oracle=f"""
         WITH ratings AS (
             SELECT CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END

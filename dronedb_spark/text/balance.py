@@ -65,6 +65,7 @@ def gini_source_balance(docs: DataFrame) -> DataFrame:
 
 @check(
     "gini_source_balance",
+    small=True,
     oracle="""
         WITH mass AS (
             SELECT source, CAST(SUM(n_chars) AS BIGINT) AS mass

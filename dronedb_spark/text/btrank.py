@@ -243,7 +243,7 @@ _BT_ORACLE = (
 )
 
 
-@check("bradley_terry_strengths", oracle=_BT_ORACLE)
+@check("bradley_terry_strengths", small=True, oracle=_BT_ORACLE)
 def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank corpus sources by Bradley-Terry strength from consecutive-doc
     duels (longer doc wins): 3 MM iterations, mean-normalized — the

@@ -109,6 +109,7 @@ def cluster_precision_audit(
 
 @check(
     "cluster_precision_audit",
+    small=True,
     oracle=f"""
         WITH RECURSIVE sig AS ({_DUCK_SIG_BANDS}),
         pairs AS (
@@ -229,6 +230,7 @@ def survivor_rollup(docs: DataFrame) -> DataFrame:
 
 @check(
     "cluster_survivor_rollup",
+    small=True,
     oracle=f"""
         WITH RECURSIVE sig AS ({_DUCK_SIG_BANDS}),
         pairs AS (

@@ -90,6 +90,7 @@ def conformal_coverage(docs: DataFrame, alpha_pct: int = ALPHA_PCT) -> DataFrame
 
 @check(
     "conformal_coverage",
+    small=True,
     oracle=f"""
         WITH scores AS (
             SELECT doc_id,

@@ -214,6 +214,7 @@ def _inflated_corpus(docs: DataFrame, copies: int = _INFLATE) -> DataFrame:
 
 @check(
     "containment_subset_pairs_10x",
+    small=True,
     oracle=f"""
         WITH base AS (
             SELECT doc_id, text FROM documents
@@ -452,6 +453,7 @@ def _excerpt_batch(docs: DataFrame) -> DataFrame:
 
 @check(
     "containment_store_probe",
+    small=True,
     oracle=f"""
         WITH batch AS (
             SELECT doc_id + {EXCERPT_OFFSET} AS doc_id,

@@ -136,6 +136,7 @@ def contamination_matrix(docs: DataFrame, vectors: DataFrame) -> DataFrame:
 
 @check(
     "contamination_matrix",
+    small=True,
     oracle=f"""
         WITH {_CHANNEL_CTES},
         all_f AS (

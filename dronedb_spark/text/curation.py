@@ -245,7 +245,7 @@ def _pipeline_oracle() -> str:
         GROUP BY cp.source ORDER BY cp.source"""
 
 
-@check("curation_pipeline_rollup", oracle=_pipeline_oracle())
+@check("curation_pipeline_rollup", small=True, oracle=_pipeline_oracle())
 def q_curation_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole curation pass composed end to end — Gopher gate, exact
     dedup, substring span removal, domain cap — with per-source
@@ -292,7 +292,7 @@ def _cluster_keep_oracle() -> str:
         FROM packed GROUP BY cluster_id ORDER BY cluster_id"""
 
 
-@check("cluster_quality_keep", oracle=_cluster_keep_oracle())
+@check("cluster_quality_keep", small=True, oracle=_cluster_keep_oracle())
 def q_cluster_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivor selection over the near-dup components: highest
     distinct-token member wins, ties to the smallest id — every

@@ -104,6 +104,7 @@ def source_datacard(docs: DataFrame) -> DataFrame:
 
 @check(
     "source_datacard",
+    small=True,
     oracle="""
         WITH per_doc AS (
             SELECT source, lang, n_chars,

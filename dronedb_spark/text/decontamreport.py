@@ -396,6 +396,7 @@ _CHANNEL_CTES = f"""
 
 @check(
     "decontam_removal_plan",
+    small=True,
     oracle=f"""
         WITH {_CHANNEL_CTES},
         tagged AS (
@@ -437,6 +438,7 @@ def q_decontam_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "decontam_channel_report",
+    small=True,
     oracle=f"""
         WITH bench AS (
             SELECT doc_id, CAST((doc_id // {EVAL_EVERY}) % {N_SETS} AS INT)

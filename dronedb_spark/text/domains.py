@@ -105,6 +105,7 @@ _D_CAPPED = d_capped_sql("documents")
 
 @check(
     "domain_quality_rollup",
+    small=True,
     oracle=f"""
         SELECT domain,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -125,6 +126,7 @@ def q_domain_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "domain_cap_sample",
+    small=True,
     oracle=f"""
         WITH capped AS ({_D_CAPPED})
         SELECT domain,
@@ -149,6 +151,7 @@ def q_domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "domain_capped_budgets",
+    small=True,
     oracle=f"""
         WITH capped AS ({_D_CAPPED}),
         counts AS (
@@ -224,6 +227,7 @@ def top_domains_with_other(docs: DataFrame, n: int = TOP_N_DOMAINS) -> DataFrame
 
 @check(
     "top_domains_other",
+    small=True,
     oracle=f"""
         WITH per AS (
             SELECT {_domain_sql("duckdb")} AS domain,

@@ -283,6 +283,7 @@ def q_dsir_doc_logweights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "dsir_resample_topk",
+    small=True,
     oracle=f"""
         WITH {_GRAMS_SQL}, {_MODEL_SQL}, {_LOGW_SQL},
         keyed AS (

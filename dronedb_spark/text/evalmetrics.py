@@ -243,6 +243,7 @@ def pr_curve(
 
 @check(
     "classifier_pr_curve",
+    small=True,
     oracle=f"""
         WITH {_HIST_SQL},
         cum AS (

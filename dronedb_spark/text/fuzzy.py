@@ -199,7 +199,7 @@ _MATCH_ORACLE = f"""
     FROM cands GROUP BY probe_id ORDER BY probe_id"""
 
 
-@check("fuzzy_blocked_matches", oracle=_MATCH_ORACLE)
+@check("fuzzy_blocked_matches", small=True, oracle=_MATCH_ORACLE)
 def q_fuzzy_blocked_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy matching of the perturbed probe batch against the
     full record table: every probe must surface its original (the
@@ -257,6 +257,7 @@ def inflated_probes(docs: DataFrame, copies: int = _FZ10_COPIES) -> DataFrame:
 
 @check(
     "fuzzy_blocked_matches_10x",
+    small=True,
     oracle=f"""
     WITH recs AS (
         SELECT doc_id AS rec_id,

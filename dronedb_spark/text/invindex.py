@@ -331,6 +331,7 @@ def kwic_probe_store(
 
 @check(
     "inverted_store_probe",
+    small=True,
     oracle=f"""
         WITH words AS (
             SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -397,6 +398,7 @@ def update_postings_store(
 
 @check(
     "inverted_store_incremental",
+    small=True,
     oracle=f"""
         WITH words AS (
             SELECT doc_id, string_split(text, ' ') AS w FROM documents),

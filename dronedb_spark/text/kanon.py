@@ -54,6 +54,7 @@ def kanonymity_audit(
 
 @check(
     "kanonymity_audit",
+    small=True,
     oracle=f"""
         WITH classes AS (
             SELECT source, lang,
@@ -118,6 +119,7 @@ def ldiversity_audit(
 
 @check(
     "ldiversity_audit",
+    small=True,
     oracle=f"""
         WITH classes AS (
             SELECT source,

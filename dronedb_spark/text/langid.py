@@ -221,6 +221,7 @@ def q_langid_nb_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "langid_nb_predictions",
+    small=True,
     oracle=f"""
         WITH {_D_TRI}, {_D_MODEL},
     scored AS (

@@ -86,6 +86,7 @@ def exact_length_quantiles(
 
 @check(
     "length_quantiles_exact",
+    small=True,
     oracle="""
         WITH hist AS (
             SELECT len(string_split(text, ' ')) AS n_tokens,

@@ -169,7 +169,7 @@ def _pagerank_oracle() -> str:
     )
 
 
-@check("domain_pagerank", oracle=_pagerank_oracle())
+@check("domain_pagerank", small=True, oracle=_pagerank_oracle())
 def q_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eight integerized power iterations over the derived domain
     graph — every domain's final rank bit-exact vs the unrolled-CTE
@@ -568,7 +568,7 @@ def hits_domain_edges(docs: DataFrame) -> DataFrame:
     )
 
 
-@check("domain_hits", oracle=_hits_oracle())
+@check("domain_hits", small=True, oracle=_hits_oracle())
 def q_domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four integerized HITS iterations over the colliding-map domain
     graph — hub and authority scores bit-exact vs the unrolled-CTE

@@ -103,6 +103,7 @@ def multiclass_f1(pred: DataFrame, truth: DataFrame) -> DataFrame:
 
 @check(
     "multiclass_f1_report",
+    small=True,
     oracle=f"""
         WITH {_D_TRI}, {_D_MODEL},
     scored AS (

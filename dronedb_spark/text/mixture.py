@@ -54,6 +54,7 @@ def temperature_budgets(docs: DataFrame, total: int = TOTAL_BUDGET) -> DataFrame
 
 @check(
     "temperature_mixture_budgets",
+    small=True,
     oracle=f"""
         WITH counts AS (
             SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
@@ -223,6 +224,7 @@ def mixture_plan(docs: DataFrame, budget_docs: int = BUDGET_DOCS) -> DataFrame:
 
 @check(
     "mixture_temperature_plan",
+    small=True,
     oracle=f"""
         WITH per_src AS (
             SELECT source,

@@ -207,7 +207,7 @@ _MWU_ORACLE = f"""
     FROM agg"""
 
 
-@check("mannwhitney_length_shift", oracle=_MWU_ORACLE)
+@check("mannwhitney_length_shift", small=True, oracle=_MWU_ORACLE)
 def q_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-sum U between the two source halves' length distributions
     — half-unit-exact integer U from the value histogram, tie-corrected
@@ -242,7 +242,7 @@ _CHI_ORACLE = """
     CROSS JOIN tot t"""
 
 
-@check("chisq_lang_source", oracle=_CHI_ORACLE)
+@check("chisq_lang_source", small=True, oracle=_CHI_ORACLE)
 def q_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square independence of language vs source — the
     mixture-design sanity test (a near-zero statistic means language is
@@ -279,7 +279,7 @@ _TRIM_ORACLE = f"""
     GROUP BY s.source ORDER BY s.source"""
 
 
-@check("trimmed_location_by_source", oracle=_TRIM_ORACLE)
+@check("trimmed_location_by_source", small=True, oracle=_TRIM_ORACLE)
 def q_trimmed_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 10%-trimmed and winsorized mean document length per source
     — micro-integer quotients under the deterministic (value, doc_id)

@@ -114,6 +114,7 @@ def q_unicode_normalize_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "unicode_normalize_corpus",
+    small=True,
     oracle="""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(0 AS BIGINT) AS n_changed,

@@ -72,6 +72,7 @@ def zipf_fit(docs: DataFrame) -> DataFrame:
 
 @check(
     "zipf_rank_frequency_fit",
+    small=True,
     oracle="""
         WITH toks AS (
             SELECT source, unnest(string_split(text, ' ')) AS tok

@@ -97,6 +97,7 @@ def _with_cross_source_copies(docs: DataFrame) -> DataFrame:
 
 @check(
     "precedence_merge",
+    small=True,
     oracle=f"""
         WITH corpus AS (
             SELECT doc_id, text, source FROM documents

@@ -70,6 +70,7 @@ def psi_bins(docs: DataFrame, bin_w: int = BIN_W, n_bins: int = N_BINS) -> DataF
 
 @check(
     "psi_length_drift",
+    small=True,
     oracle=f"""
         WITH binned AS (
             SELECT LEAST(CAST(n_chars // {BIN_W} AS BIGINT), {N_BINS - 1}) AS bin,

@@ -340,7 +340,7 @@ _QUOTA_ORACLE = """
         GROUP BY source ORDER BY source"""
 
 
-@check("mixture_quota_twophase", oracle=_QUOTA_ORACLE)
+@check("mixture_quota_twophase", small=True, oracle=_QUOTA_ORACLE)
 def q_mixture_quota_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two-phase scale path against the SAME oracle as the window
     formulation — survivor sets must be identical."""

@@ -490,7 +490,7 @@ def _worker_schedule_oracle() -> str:
         FROM withw GROUP BY worker ORDER BY worker"""
 
 
-@check("crawl_worker_schedule", oracle=_worker_schedule_oracle())
+@check("crawl_worker_schedule", small=True, oracle=_worker_schedule_oracle())
 def q_crawl_worker_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The politeness-sharded crawl schedule: hosts consistent-hash to
     4 workers, per-worker URL load and both wall-clock bounds — every

@@ -207,6 +207,7 @@ def sft_pack_batches(
 
 @check(
     "sft_pack_batches",
+    small=True,
     oracle=f"""
         WITH toks AS (
             SELECT doc_id,

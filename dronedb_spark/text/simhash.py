@@ -191,6 +191,7 @@ def simhash_neardup_pairs(
 
 @check(
     "simhash_neardup_pairs",
+    small=True,
     oracle=f"""
         WITH sig AS ({_signature_select("duckdb")}),
         pairs AS (

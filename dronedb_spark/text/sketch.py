@@ -430,6 +430,7 @@ def _d_state(name: str, where: str) -> str:
 
 @check(
     "hll_set_algebra",
+    small=True,
     oracle=f"""
         {_d_state('a', "event_type = 'purchase'")}
         UNION ALL

@@ -259,6 +259,7 @@ def q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "url_blocklist_hosts",
+    small=True,
     oracle=f"""
         WITH urls AS (SELECT doc_id, {_D_URL} AS url FROM documents),
         {_D_PARTS},
@@ -323,6 +324,7 @@ def q_url_canonical_dedup_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @check(
     "crawl_entry_rollup",
+    small=True,
     oracle=f"""
         WITH urls AS (SELECT doc_id, source, {_D_URL} AS url FROM documents),
         {_D_PARTS},

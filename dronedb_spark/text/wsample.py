@@ -66,6 +66,7 @@ def weighted_priority_sample(
 
 @check(
     "weighted_priority_sample",
+    small=True,
     oracle=f"""
         WITH pri AS (
             SELECT doc_id, source, CAST(n_chars AS BIGINT) AS weight,

@@ -164,6 +164,7 @@ _DUCK_NORM_Q = "sqrt(list_dot_product(CAST(q.q_emb AS DOUBLE[]), CAST(q.q_emb AS
 
 @check(
     "ann_lsh_top5",
+    small=True,
     oracle=f"""
         WITH b AS (SELECT e.*, {_duck_bucket('e')} AS bucket FROM embeddings e),
         q AS (SELECT embedding AS q_emb, bucket AS q_bucket FROM b WHERE vec_id = 0)
@@ -255,6 +256,7 @@ def ann_multiprobe_search(
 
 @check(
     "ann_multiprobe_top5",
+    small=True,
     # the oracle states the probe set SEMANTICALLY: a candidate's bucket
     # is within Hamming distance 1 of the query's (== the 1+N_PLANES
     # one-bit flips the Spark side materializes driver-side)
@@ -344,6 +346,7 @@ def ann_store_multiprobe(
 
 @check(
     "ann_store_multiprobe",
+    small=True,
     oracle=f"""
         WITH b AS (SELECT e.*, {_duck_bucket('e')} AS bucket FROM embeddings e),
         q AS (SELECT embedding AS q_emb, bucket AS q_bucket FROM b WHERE vec_id = 0),

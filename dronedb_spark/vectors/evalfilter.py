@@ -70,6 +70,7 @@ def eval_contaminated(corpus: DataFrame, eval_set: DataFrame,
 
 @check(
     "embedding_eval_decontam",
+    small=True,
     oracle=f"""
         WITH ev AS (
             SELECT embedding AS e_emb FROM embeddings WHERE vec_id % 17 = 0),

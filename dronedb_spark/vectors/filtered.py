@@ -103,6 +103,7 @@ def filtered_ivf_search(
 
 @check(
     "filtered_ivf_top10",
+    small=True,
     oracle=f"""
         WITH {_D_ASSIGN},
         q AS (SELECT embedding AS q_emb FROM embeddings

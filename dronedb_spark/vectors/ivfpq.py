@@ -283,7 +283,7 @@ _IVFPQ_ORACLE = f"""
 _Q_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-@check("ivfpq_adc_top10", oracle=_IVFPQ_ORACLE)
+@check("ivfpq_adc_top10", small=True, oracle=_IVFPQ_ORACLE)
 def q_ivfpq_adc_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed index end-to-end: IVF probe prunes to NPROBE cells,
     PQ ADC rescores only those candidates; the oracle restates the whole
@@ -396,7 +396,7 @@ _IVFPQ_RERANK_ORACLE = f"""
 _RR_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-@check("ivfpq_rerank_top10", oracle=_IVFPQ_RERANK_ORACLE)
+@check("ivfpq_rerank_top10", small=True, oracle=_IVFPQ_RERANK_ORACLE)
 def q_ivfpq_rerank_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC shortlist (top-50 compressed scores in the probed cells) →
     exact L2 rerank of the shortlist only → top-10.  The oracle
@@ -491,7 +491,7 @@ def residual_codebook_for(
     return cb
 
 
-@check("ivfpq_residual_top10", oracle=_IVFPQ_RES_ORACLE)
+@check("ivfpq_residual_top10", small=True, oracle=_IVFPQ_RES_ORACLE)
 def q_ivfpq_residual_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FAISS-recipe residual index end-to-end: IVF probe prunes to
     NPROBE cells, residual-trained PQ codes rescore with the query's

@@ -85,6 +85,7 @@ _DUCK_NORM_Q = "sqrt(list_dot_product(CAST(q.q_emb AS DOUBLE[]), CAST(q.q_emb AS
 
 @check(
     "knn_cosine_top10",
+    small=True,
     oracle=f"""
         WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
         SELECT e.vec_id, e.label,

@@ -75,6 +75,7 @@ def ivf_migration_plan(embeddings: DataFrame) -> DataFrame:
 
 @check(
     "ivf_migration_plan",
+    small=True,
     oracle=f"""
         WITH {_D_ASSIGN},
         old_assign AS (

@@ -94,6 +94,7 @@ def retrieval_mrr(embeddings: DataFrame, n_queries: int = N_QUERIES,
 
 @check(
     "retrieval_mrr",
+    small=True,
     oracle=f"""
         WITH qs AS (
             SELECT vec_id AS q_id, label AS q_label,

@@ -346,7 +346,7 @@ def codebook_for(spark: SparkSession, sf_dir: str) -> dict[tuple[int, int], list
 _Q_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-@check("pq_adc_top10", oracle=_PQ_ORACLE)
+@check("pq_adc_top10", small=True, oracle=_PQ_ORACLE)
 def q_pq_adc_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ end-to-end: train codebooks (Lloyd, deterministic seed; cached
     per session+dataset as the index artifact) → literal-folded encode →

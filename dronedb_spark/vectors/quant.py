@@ -141,7 +141,7 @@ def sq8_search_top10(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) 
 # ------------------------------------------------------------------ check
 
 
-@check("sq8_adc_top10", oracle=sq8_sql("duckdb"))
+@check("sq8_adc_top10", small=True, oracle=sq8_sql("duckdb"))
 def q_sq8_adc_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 encode + ADC search, exact-value checked: dims ranges, the
     floor(+0.5) code rule, reconstruction arithmetic, and decimal-exact

@@ -137,6 +137,7 @@ def rbo_prefix_stability(
 
 @check(
     "rbo_prefix_stability",
+    small=True,
     oracle=f"""
         WITH pts AS (
             SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,

@@ -319,6 +319,7 @@ def _with_planted_copies(embeddings: DataFrame) -> DataFrame:
 
 @check(
     "semdedup_cell_rollup",
+    small=True,
     oracle=f"""
         WITH base AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
@@ -490,6 +491,7 @@ def incremental_semdedup(
 
 @check(
     "semdedup_incremental",
+    small=True,
     oracle=f"""
         WITH store_base AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
@@ -632,6 +634,7 @@ def _with_10x_copies(embeddings: DataFrame) -> DataFrame:
 
 @check(
     "semdedup_cell_rollup_10x",
+    small=True,
     oracle=f"""
         WITH base AS (
             SELECT e.vec_id + c.c * {_10X_STRIDE} AS vec_id,

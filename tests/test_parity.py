@@ -1,15 +1,14 @@
 """Local mirror of the driver's t2 gate: run every registered check's
-Spark query AND its DuckDB oracle on the same parquet, compare row count,
-column names, and order-insensitive values."""
+Spark query AND its DuckDB oracle on the same parquet and compare them
+with ``dronedb_spark.suite.compare_rows`` (column names in order, row
+count, order-insensitive values)."""
 
 from __future__ import annotations
-
-import math
 
 import duckdb
 import pytest
 
-from dronedb_spark.suite import load_all
+from dronedb_spark.suite import compare_rows, load_all
 from dronedb_spark.tables import TABLE_NAMES
 
 REGISTRY = load_all()
@@ -20,28 +19,6 @@ def _duck(sf_dir: str):
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     return con
-
-
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    if isinstance(v, bool):
-        return bool(v)
-    try:
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return round(float(v), 9)
-    except ImportError:  # pragma: no cover
-        pass
-    return v
-
-
-def _rows_key(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
 _INTEGRAL_SPARK = {"tinyint", "smallint", "int", "bigint"}
@@ -152,12 +129,7 @@ def test_parity(name, spark, sf_dir):
     d_cols = [d[0].lower() for d in res.description]
     d_rows = res.fetchall()
 
-    assert sorted(s_cols) == sorted(d_cols), f"{name}: columns {s_cols} vs {d_cols}"
-    assert len(s_rows) == len(d_rows), f"{name}: rowcount {len(s_rows)} vs {len(d_rows)}"
-    sk = _rows_key(s_rows, s_cols)
-    dk = _rows_key(d_rows, d_cols)
-    mismatches = [(a, b) for a, b in zip(sk, dk) if a != b][:5]
-    assert sk == dk, f"{name}: value mismatch, first diffs: {mismatches}"
+    compare_rows(s_cols, s_rows, d_cols, d_rows)
     _lint_oracle_render(name, sdf, con, chk.oracle)
 
 

@@ -1,43 +1,24 @@
 """Focused driver-gate sim: run named checks' Spark query AND DuckDB
-oracle on the same parquet, compare rows/columns/values (the
-tests/test_parity.py comparison, runnable per-name at any SF).
+oracle on the same parquet and compare them with
+``dronedb_spark.suite.compare_rows`` (the tests/test_parity.py
+comparison, runnable per-name at any SF).
 
 Usage: python tools/simcheck.py [--sf /root/testdata/sf0.01] name [name ...]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    if isinstance(v, bool):
-        return bool(v)
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return round(float(v), 9)
-    return v
-
-
-def _rows_key(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
-
-
 def main() -> None:
     import duckdb
 
     from dronedb_spark.session import get_spark
-    from dronedb_spark.suite import load_all
+    from dronedb_spark.suite import compare_rows, load_all
     from dronedb_spark.tables import TABLE_NAMES
 
     args = sys.argv[1:]
@@ -69,14 +50,7 @@ def main() -> None:
             res = con.execute(chk.oracle)
             d_cols = [d[0].lower() for d in res.description]
             d_rows = res.fetchall()
-            assert s_cols == d_cols, f"columns {s_cols} vs {d_cols}"
-            assert len(s_rows) == len(d_rows), (
-                f"rowcount {len(s_rows)} vs {len(d_rows)}"
-            )
-            sk = _rows_key(s_rows, s_cols)
-            dk = _rows_key(d_rows, d_cols)
-            mm = [(a, b) for a, b in zip(sk, dk) if a != b][:3]
-            assert sk == dk, f"value mismatch, first diffs: {mm}"
+            compare_rows(s_cols, s_rows, d_cols, d_rows)
             print(f"PASS {name} ({len(s_rows)} rows)")
         except Exception as e:
             print(f"FAIL {name}: {e}")

@@ -96,137 +96,6 @@ DRIVER_SUBSET = LINE_ROWS + [
 _HEADLINE24 = LINE_ROWS[:24]
 
 
-_SPOT_COPIES = 10
-_SPOT_STRIDE = 10_000_000
-
-
-def _scale_spot_main(spark, sf_dir: str, cpus: int) -> None:
-    """SPARK_GRAFT_SCALE_SPOT=1 mode (r14, VERDICT r13 #7): time a
-    handful of heavy kernels on 10x-inflated inputs so the low-core vs
-    high-core ratio has something real to measure — at sf0.1 every
-    registered row is scheduler-bound and the scaling block cannot
-    demonstrate parallelism (the 8-core pass beat the 32-core pass in
-    r13).  Additions-only: the driver never sets the env var, the
-    57-row line and both BENCH_SELF artifacts are untouched; this mode
-    prints its own one-line JSON (metric scale_spot_total_sec) and
-    writes BENCH_SCALE_SPOT_c<cpus>.json."""
-    from pyspark.sql import functions as F
-
-    from dronedb_spark.tables import load, reset_run_cache
-
-    def inflate(df, key=None):
-        ks = F.broadcast(
-            spark.range(_SPOT_COPIES).select(F.col("id").alias("_k"))
-        )
-        out = df.crossJoin(ks)
-        if key is not None:
-            out = out.withColumn(key, F.col(key) + F.col("_k") * _SPOT_STRIDE)
-        return out.drop("_k") if key is not None else out
-
-    def lineitem_groupagg():
-        # scan + map-side aggregation (the q1 shape) at 10x row mass
-        li = inflate(load(spark, sf_dir, "lineitem"))
-        return li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.sum("l_quantity").alias("sq"),
-            F.sum("l_extendedprice").alias("se"),
-            F.avg("l_discount").alias("ad"),
-            F.count(F.lit(1)).alias("n"),
-        )
-
-    def minhash_signatures_10x():
-        # the HOF-hashing CPU kernel over a 10x re-keyed corpus
-        from dronedb_spark.text.dedup import minhash_signatures
-
-        docs = inflate(
-            load(spark, sf_dir, "documents").select("doc_id", "text"),
-            "doc_id",
-        )
-        return minhash_signatures(docs)
-
-    def events_hourly_10x():
-        # timestamp bucketing + shuffle aggregation at 10x event mass
-        ev = inflate(load(spark, sf_dir, "events"))
-        return ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("h")
-        ).agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-
-    def token_counts_10x():
-        # explode + wide-key shuffle (the vocabulary-count shape)
-        docs = inflate(
-            load(spark, sf_dir, "documents").select("doc_id", "text"),
-            "doc_id",
-        )
-        toks = docs.select(
-            F.explode(F.split(F.col("text"), " ")).alias("tok")
-        )
-        return toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
-
-    def embeddings_dot_10x():
-        # vectorized in-row arithmetic over 10x vector mass
-        emb = inflate(
-            load(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
-            "vec_id",
-        )
-        return emb.select(
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(embedding, reverse(embedding),"
-                " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-                " CAST(0 AS DOUBLE), (a, t) -> a + t)"
-            ).alias("dot"),
-        )
-
-    spots = {
-        "spot10x_lineitem_groupagg": lineitem_groupagg,
-        "spot10x_minhash_signatures": minhash_signatures_10x,
-        "spot10x_events_hourly": events_hourly_10x,
-        "spot10x_token_counts": token_counts_10x,
-        "spot10x_embeddings_dot": embeddings_dot_10x,
-    }
-    spark.range(1000).count()
-    results: dict[str, float] = {}
-    for name, fn in spots.items():
-        def run_once() -> float:
-            reset_run_cache(spark)
-            t0 = time.time()
-            fn().write.format("noop").mode("overwrite").save()
-            return time.time() - t0
-
-        run_once()  # warm
-        results[name] = round(min(run_once(), run_once(), run_once()), 3)
-        print(f"[scale-spot] {name}: {results[name]}s", file=sys.stderr, flush=True)
-    try:
-        loadavg = round(os.getloadavg()[0], 1)
-    except OSError:
-        loadavg = -1.0
-    record = json.dumps(
-        {
-            "metric": "scale_spot_total_sec",
-            "value": round(sum(results.values()), 3),
-            "unit": "sec",
-            "queries": results,
-            "cpus": cpus,
-            "copies": _SPOT_COPIES,
-            "sf_dir": sf_dir,
-            "load1m": loadavg,
-        }
-    )
-    try:
-        out = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_SCALE_SPOT_c{cpus}.json",
-        )
-        with open(out, "w") as fh:
-            fh.write(record + "\n")
-    except OSError:
-        pass
-    try:
-        spark.stop()
-    except Exception:
-        pass
-    print(record, flush=True)
-
-
 def time_row(spark, chk, sf_dir: str) -> float:
     """Steady-state seconds of one registry check: one UNTIMED warm run
     at the measured SF (footers, codegen, shuffle files), then best-of-3
@@ -277,10 +146,6 @@ def main() -> None:
     from dronedb_spark.suite import load_all
 
     full = os.environ.get("SPARK_GRAFT_BENCH_FULL", "") == "1"
-
-    if os.environ.get("SPARK_GRAFT_SCALE_SPOT", "") == "1":
-        _scale_spot_main(get_spark("dronedb_spark_scale_spot", cpus=cpus), sf_dir, cpus)
-        return
 
     spark = get_spark("dronedb_spark_bench", cpus=cpus)
     registry = load_all()

@@ -18,7 +18,7 @@ catalog the same semantics would be kept but fed by a per-range pre-concat
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dronedb_spark.catalog.derive import entries_df, entries_meta_df, with_catalog
@@ -66,20 +66,23 @@ def apply_delta_classify(ours: DataFrame, theirs: DataFrame) -> DataFrame:
     return j.select("path", cls.alias("class"))
 
 
+def _sorted_concat(*parts: str, by: tuple[str, ...] = ()) -> Column:
+    """Aggregate: the rows' ``parts`` concatenated in ``(*by, *parts)``
+    order, NULL when any row holds a NULL part.  One array_join over the
+    sorted structs is linear in the row count (an ``acc || x.part`` fold
+    copies the growing string per row: quadratic); array_join skips NULL
+    elements, so the count guard keeps the NULL."""
+    pairs = F.expr(
+        f"transform(sort_array(collect_list(struct({', '.join(by + parts)}))),"
+        f" x -> {' || '.join('x.' + p for p in parts)})"
+    )
+    return F.when(F.count(F.lit(1)) == F.count(F.concat(*parts)), F.array_join(pairs, ""))
+
+
 def stamp_checksum(entries: DataFrame, meta: DataFrame | None = None) -> DataFrame:
     """A8 (database.cpp:288-331): SHA256 over path+hash concatenated in
     path order, then meta ids in id order."""
-    ent = entries.select(F.col("path"), F.col("hash"))
-    # one array_join over the sorted pairs — linear in the entry count
-    # (an ``acc || x.path || x.hash`` fold copies the growing string per
-    # entry: quadratic).  array_join skips NULL elements, so the count
-    # guard keeps NULL semantics: any NULL path or hash → NULL body.
-    pairs = F.expr("transform(sort_array(collect_list(struct(path, hash))), x -> x.path || x.hash)")
-    body = ent.agg(
-        F.when(
-            F.count(F.lit(1)) == F.count(F.concat("path", "hash")), F.array_join(pairs, "")
-        ).alias("body")
-    )
+    body = entries.agg(_sorted_concat("path", "hash").alias("body"))
     if meta is not None:
         ids = meta.agg(F.array_join(F.sort_array(F.collect_list("id")), "").alias("meta_ids"))
         body = body.crossJoin(ids).select(
@@ -178,24 +181,8 @@ def stamp_tree_digest(entries: DataFrame, n_buckets: int = 16) -> DataFrame:
         "path",
         "hash",
     )
-    per = b.groupBy("bucket").agg(
-        F.sha2(
-            F.expr(
-                "aggregate(sort_array(collect_list(struct(path, hash))), '',"
-                " (acc, x) -> acc || x.path || x.hash)"
-            ),
-            256,
-        ).alias("digest")
-    )
-    return per.agg(
-        F.sha2(
-            F.expr(
-                "aggregate(sort_array(collect_list(struct(bucket, digest))), '',"
-                " (acc, x) -> acc || x.digest)"
-            ),
-            256,
-        ).alias("checksum")
-    )
+    per = b.groupBy("bucket").agg(F.sha2(_sorted_concat("path", "hash"), 256).alias("digest"))
+    return per.agg(F.sha2(_sorted_concat("digest", by=("bucket",)), 256).alias("checksum"))
 
 
 @check(
@@ -223,10 +210,11 @@ def status_classify(index: DataFrame, fs: DataFrame) -> DataFrame:
     The reference walks rows one at a time; here it is one full-outer join
     on path.  The mtime-then-hash short-circuit (X4) survives as predicate
     ORDER inside the CASE: equal mtime classifies NotModified without ever
-    consulting the hash column, so in the real catalog store the fs-side
-    hash is only *computed* for mtime-changed paths (see
-    ``catalog/store.py:status`` which stages the scan that way); equal
-    hash under a changed mtime is a touch, not a modification.
+    consulting the hash column; equal hash under a changed mtime is a
+    touch, not a modification.  The catalog store does NOT follow this
+    rule: ``catalog/store.py:_status`` compares mtimes only and never
+    reads a hash, so a touched file with unchanged content counts as
+    Modified there.
 
     Scale: one shuffle on path for both sides; at 100 TB the catalog side
     is bucketed by path (see SCALE.md), so only the fs scan moves.

@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import spread
+from dronedb_spark.text.tokens import tokens
 
 # ------------------------------------------------------------ writer --
 
@@ -425,7 +426,7 @@ def q_warc_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rec_no",
         "target_uri",
         "text",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
     ).orderBy("file_name", "rec_no")
 
 

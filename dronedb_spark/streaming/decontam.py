@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
 from dronedb_spark.text.decontam import _grams
+from dronedb_spark.text.tokens import tokens
 
 
 def stream_decontam_probe(
@@ -32,7 +33,7 @@ def stream_decontam_probe(
     broadcast stream-static join per trigger."""
     probe = batch_stream.select(
         "doc_id",
-        F.explode(_grams(F.split(F.col("text"), " "))).alias("gram"),
+        F.explode(_grams(tokens("text"))).alias("gram"),
     )
     return probe.join(F.broadcast(bench_grams), "gram").select(
         "doc_id", "set_id", "gram"
@@ -73,7 +74,7 @@ def q_stream_decontam_hits_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = eval_members(docs)
     bgrams = bench.select(
         "set_id",
-        F.explode(_grams(F.split(F.col("text"), " "))).alias("gram"),
+        F.explode(_grams(tokens("text"))).alias("gram"),
     ).distinct()
     from dronedb_spark.tables import spread
 

@@ -292,14 +292,13 @@ def stream_substring_probe(
     passed (state bounded by the horizon; without it, bounded replays
     only)."""
     from dronedb_spark.text.substring import K_TOKENS, _kgram_col
+    from dronedb_spark.text.tokens import tokens
 
     kk = k if k is not None else K_TOKENS
     carry = (event_time,) if event_time else ()
     if event_time:
         batch_stream = batch_stream.withWatermark(event_time, delay)
-    toks = batch_stream.select(
-        "doc_id", *carry, F.split("text", " ").alias("toks")
-    )
+    toks = batch_stream.select("doc_id", *carry, tokens("text").alias("toks"))
     anchors = toks.select(
         "doc_id", *carry, F.posexplode(_kgram_col(kk)).alias("p0", "gram")
     ).select(

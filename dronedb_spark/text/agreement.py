@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import words
 
 N_CLASSES = 3
 
@@ -36,7 +37,7 @@ def annotator_labels(docs: DataFrame) -> DataFrame:
     """(doc_id, a1, a2): the two derived annotators — a1 buckets
     character mass, a2 buckets whitespace-token mass, both clamped to
     ``N_CLASSES`` classes."""
-    toks = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    toks = F.size(words("text"))
     base = docs.select("doc_id", "n_chars", toks.cast("bigint").alias("ntok"))
     return base.select(
         "doc_id",

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import words
 
 M_CODERS = 3
 CHAR_CUT = 400
@@ -45,7 +46,7 @@ TOK_CUT = 60
 def coder_ratings(docs: DataFrame) -> DataFrame:
     """(doc_id, c1, c2, c3): the derived binary panel — language,
     character-mass, token-mass coders."""
-    toks = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    toks = F.size(words("text"))
     return docs.select(
         "doc_id",
         # NULL-safe: (lang == 'en') is NULL for a NULL lang and would

@@ -46,6 +46,7 @@ from dronedb_spark.sources.warc import (
     warc_records,
 )
 from dronedb_spark.suite import check
+from dronedb_spark.text.tokens import words
 
 _A_RE = re.compile(
     rb"<a\s[^>]*href\s*=\s*[\"']([^\"']+)[\"'][^>]*>(.*?)</a\s*>",
@@ -117,7 +118,7 @@ def anchor_rollup(links: DataFrame) -> DataFrame:
     """Per target host: in-link count, distinct linking hosts, anchor
     token mass — one map-side-combinable shuffle."""
     src_host = F.expr(_HOST_OF.format(u="source_uri"))
-    toks = F.size(F.filter(F.split("anchor_text", " "), lambda w: w != ""))
+    toks = F.size(words("anchor_text"))
     return (
         links.select("target_host", src_host.alias("src_host"), toks.alias("n_toks"))
         .groupBy("target_host")

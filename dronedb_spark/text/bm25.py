@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import words
 
 K1 = 1.2
 B = 0.75
@@ -41,9 +42,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str], k1: float = K1, b: floa
     q = F.broadcast(
         spark.createDataFrame([(t,) for t in query_terms], "tok string")
     )
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = docs.select("doc_id", F.explode(words("text")).alias("tok"))
     # r14 (guide §2.3/§2.4): document length is an IN-ROW size() over
     # the split array — the old ``toks.groupBy(doc_id).count()`` form
     # re-ran the corpus tokenize+explode for dl AND (via avgdl) a third
@@ -54,10 +53,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str], k1: float = K1, b: floa
     # one dl per doc_id (the rows' lengths added), so the tf join
     # cannot fan out and avgdl averages over distinct ids.
     dl = (
-        docs.select(
-            "doc_id",
-            F.size(F.filter(F.split("text", " "), lambda x: x != "")).alias("dl"),
-        )
+        docs.select("doc_id", F.size(words("text")).alias("dl"))
         .filter(F.col("dl") > 0)
         .groupBy("doc_id")
         .agg(F.sum("dl").alias("dl"))

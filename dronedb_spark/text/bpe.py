@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load, spread
+from dronedb_spark.text.tokens import tokens
 
 END = "</w>"
 
@@ -38,7 +39,7 @@ def word_freqs(docs: DataFrame) -> DataFrame:
     works on."""
     return (
         spread(docs)
-        .select(F.explode(F.split(F.col("text"), " ")).alias("word"))
+        .select(F.explode(tokens("text")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -341,7 +342,7 @@ def bpe_fertility_profile(docs: DataFrame) -> DataFrame:
     micro-quotients, bit-deterministic."""
     sw = (
         spread(docs)
-        .select("source", F.explode(F.split(F.col("text"), " ")).alias("word"))
+        .select("source", F.explode(tokens("text")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("freq"))

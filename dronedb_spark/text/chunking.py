@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 CHUNK = 8     # tokens per chunk
 OVERLAP = 2   # tokens shared between consecutive chunks
@@ -41,7 +42,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk:
         raise ValueError(f"need 0 <= overlap < chunk, got {overlap}/{chunk}")
     stride = chunk - overlap
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     base = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
     n_chunks = F.greatest(
         F.lit(1),

@@ -26,13 +26,14 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 
 def feature_cols() -> list[tuple[str, Column]]:
     """Named feature expressions over a documents table — scaled to
     O(1) so the Gram matrix stays well-conditioned."""
     text = F.col("text")
-    toks = F.split(text, " ")
+    toks = tokens(text)
     n_tok = F.size(toks).cast("double")
     return [
         ("bias", F.lit(1.0)),

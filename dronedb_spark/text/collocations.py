@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import words
 
 MIN_COUNT = 5
 TOP_K = 20
@@ -42,9 +43,7 @@ def bigram_lift_topk(
 ) -> DataFrame:
     """(w1, w2, c_ab, c_a, c_b, lift): the top-k adjacent pairs by lift
     among pairs seen at least ``min_count`` times."""
-    toks = docs.select(
-        F.filter(F.split("text", " "), lambda w: w != "").alias("w")
-    )
+    toks = docs.select(words("text").alias("w"))
     pairs = toks.select(
         F.explode(
             F.zip_with(

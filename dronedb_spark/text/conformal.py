@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 ALPHA_PCT = 10  # miscoverage 0.10 as an exact integer percentage
 
@@ -39,7 +40,7 @@ ALPHA_PCT = 10  # miscoverage 0.10 as an exact integer percentage
 def _scored(docs: DataFrame) -> DataFrame:
     """(doc_id, nc): the integer nonconformity |6·n_tokens − n_chars|
     of the fixed ŷ = n_chars/6 token-count predictor."""
-    n_tok = F.size(F.split("text", " ")).cast("bigint")
+    n_tok = F.size(tokens("text")).cast("bigint")
     return docs.select(
         "doc_id",
         F.abs(6 * n_tok - F.col("n_chars")).cast("bigint").alias("nc"),

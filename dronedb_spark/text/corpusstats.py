@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load, register_views
+from dronedb_spark.text.tokens import tokens
 
 N_BUCKETS = 10
 MAX_GRAM_SOURCES = 10  # grams in more sources than this are boilerplate
@@ -56,9 +57,7 @@ _GRAM3_DUCK = """
 
 def _doc_grams(docs: DataFrame) -> DataFrame:
     """(doc_id, source, gram): DISTINCT 3-grams per document."""
-    toks = docs.select(
-        "doc_id", "source", F.split("text", " ").alias("toks")
-    )
+    toks = docs.select("doc_id", "source", tokens("text").alias("toks"))
     return (
         toks.filter(F.size("toks") >= 3)
         .select(
@@ -83,7 +82,7 @@ def saturation_curve(docs: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
         % n_buckets
     )
     toks = (
-        docs.select(bucket.alias("bucket"), F.split("text", " ").alias("toks"))
+        docs.select(bucket.alias("bucket"), tokens("text").alias("toks"))
         .filter(F.size("toks") >= 3)
         .select("bucket", F.explode(F.expr(_GRAM3_SPARK)).alias("tok"))
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 
 def ccnet_perplexity_buckets(docs: DataFrame) -> DataFrame:
@@ -71,7 +72,7 @@ def cluster_quality_keep(docs: DataFrame) -> DataFrame:
     clusters = neardup_clusters(docs)
     quality = docs.select(
         "doc_id",
-        F.size(F.array_distinct(F.split("text", " "))).cast("bigint").alias("n_dis"),
+        F.size(F.array_distinct(tokens("text"))).cast("bigint").alias("n_dis"),
     )
     packed = F.concat(
         F.lpad((F.lit(999999) - F.col("n_dis")).cast("string"), 6, "0"),

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 
 def source_datacard(docs: DataFrame) -> DataFrame:
@@ -41,15 +42,14 @@ def source_datacard(docs: DataFrame) -> DataFrame:
     row."""
     from dronedb_spark.tables import barrier_persist
 
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     per_doc = docs.select(
         "source",
         "lang",
         "n_chars",
         F.size(toks).cast("bigint").alias("ntok"),
-        F.expr(
-            "CAST(size(array_distinct(split(text, ' '))) AS BIGINT)"
-            " * 1000000 DIV size(split(text, ' '))"
+        F.call_function(
+            "div", F.size(F.array_distinct(toks)).cast("bigint") * 1000000, F.size(toks)
         ).alias("distinct_micro"),
         F.md5(F.col("text").cast("binary")).alias("h"),
     )

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 N_GRAM = 4
 
@@ -48,7 +49,7 @@ def benchmark_ngrams(docs: DataFrame, every: int = 17, offset: int = 3) -> DataF
     """The benchmark-side n-gram relation (distinct grams of every
     ``every``-th doc) — small by construction; marked broadcast at the
     join site."""
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     return (
         docs.filter(F.col("doc_id") % every == offset)
         .select(F.explode(_grams(toks)).alias("gram"))
@@ -60,7 +61,7 @@ def decontaminate(docs: DataFrame, bench: DataFrame) -> DataFrame:
     """Per-doc contamination counts against the benchmark n-gram set."""
     from dronedb_spark.tables import spread
 
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     exploded = spread(docs).select(
         "doc_id", F.explode(_grams(toks)).alias("gram")
     )

@@ -57,6 +57,7 @@ from dronedb_spark.text.containment import (
     containment_pairs,
 )
 from dronedb_spark.text.decontam import _grams
+from dronedb_spark.text.tokens import tokens
 
 EVAL_EVERY = 17
 EVAL_OFFSET = 3
@@ -97,11 +98,7 @@ def corpus_toks(corpus: DataFrame) -> DataFrame:
     once per channel."""
     from dronedb_spark.tables import barrier_persist, spread
 
-    return barrier_persist(
-        spread(corpus).select(
-            "doc_id", F.split(F.col("text"), " ").alias("toks")
-        )
-    )
+    return barrier_persist(spread(corpus).select("doc_id", tokens("text").alias("toks")))
 
 
 def ngram_flags(
@@ -111,7 +108,7 @@ def ngram_flags(
     any member of the set — broadcast bench-gram semi-join."""
     bgrams = bench.select(
         "set_id",
-        F.explode(_grams(F.split(F.col("text"), " "))).alias("gram"),
+        F.explode(_grams(tokens("text"))).alias("gram"),
     ).distinct()
     from dronedb_spark.tables import spread
 
@@ -121,7 +118,7 @@ def ngram_flags(
         )
     else:
         cgrams = spread(corpus).select(
-            "doc_id", F.explode(_grams(F.split(F.col("text"), " "))).alias("gram")
+            "doc_id", F.explode(_grams(tokens("text"))).alias("gram")
         )
     return (
         cgrams.join(F.broadcast(bgrams), "gram")

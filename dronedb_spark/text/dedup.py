@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 N_HASHES = 6
 BANDS = 2  # 2 bands × 3 rows
@@ -79,7 +80,7 @@ def _shingle_df(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     the expression lands in an interpreted (non-codegen) operator.
     """
     return _shingles_from_toks(
-        docs.select("doc_id", *carry, F.split("text", " ").alias("toks")),
+        docs.select("doc_id", *carry, tokens("text").alias("toks")),
         carry,
     )
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 DOMAIN_CAP = 8  # max surviving documents per domain
 
@@ -55,7 +56,7 @@ def domain_quality_rollup(docs: DataFrame) -> DataFrame:
     accounting — document count, whitespace-token mass, and lexical
     diversity as a ratio of exact sums (Σ distinct tokens / Σ tokens),
     the host-level signals FineWeb-style curation thresholds on."""
-    toks = F.split("text", " ")
+    toks = tokens("text")
     per_doc = with_domain(docs).select(
         "domain",
         F.size(toks).cast("bigint").alias("n_tok"),
@@ -197,7 +198,7 @@ def top_domains_with_other(docs: DataFrame, n: int = TOP_N_DOMAINS) -> DataFrame
     domains-sized rank window; the overflow regroup is a second
     domains-sized aggregate, never a data pass."""
     per = with_domain(docs).select(
-        "domain", F.size(F.split("text", " ")).cast("bigint").alias("n_tok")
+        "domain", F.size(tokens("text")).cast("bigint").alias("n_tok")
     )
     agg = per.groupBy("domain").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

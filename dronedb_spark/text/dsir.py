@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 N_BUCKETS = 64
 SEED = "dsir1"
@@ -64,7 +65,7 @@ def hashed_gram_counts(docs: DataFrame) -> DataFrame:
     # per-gram md5 is the heavy kernel — full parallelism before it
     # (the langid featurizer rule); the 10x twin otherwise hashed its
     # whole inflated corpus on the scan's single input partition
-    toks = spread(docs).select("doc_id", F.split("text", " ").alias("toks"))
+    toks = spread(docs).select("doc_id", tokens("text").alias("toks"))
     grams = toks.select(
         "doc_id",
         F.concat(

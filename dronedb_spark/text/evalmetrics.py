@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 MICRO = 1_000_000
 N_BINS = 10
@@ -139,7 +140,7 @@ _HIST_SQL = f"""
 
 
 def _score_col() -> Column:
-    toks = F.split("text", " ")
+    toks = tokens("text")
     return F.size(F.array_distinct(toks)).cast("double") / F.size(toks).cast(
         "double"
     )

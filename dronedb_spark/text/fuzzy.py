@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load, spread
+from dronedb_spark.text.tokens import tokens
 
 PREFIX_LEN = 2
 MAX_DIST = 2
@@ -48,7 +49,7 @@ def entity_records(docs: DataFrame) -> DataFrame:
     """(rec_id, name, block): one entity mention per document — the
     name is the document's first three tokens (diverse, deterministic),
     the block its first ``PREFIX_LEN`` characters."""
-    name = F.array_join(F.slice(F.split("text", " "), 1, 3), " ")
+    name = F.array_join(F.slice(tokens("text"), 1, 3), " ")
     return spread(docs).select(
         F.col("doc_id").alias("rec_id"),
         name.alias("name"),

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 MIN_WORDS, MAX_WORDS = 50, 100000
 # Gopher's rule is "≥ 2 of a fixed stop-word list" — the list is a
@@ -50,7 +51,7 @@ def _occ(col: Column, needle: str) -> Column:
 def gopher_quality_flags(docs: DataFrame) -> DataFrame:
     """(doc_id, n_words, r1..r5 as 0/1 ints, keep) — the Gopher gate,
     each rule exposed so downstream analysis can attribute drops."""
-    toks = F.split("text", " ")
+    toks = tokens("text")
     per_doc = docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_words"),

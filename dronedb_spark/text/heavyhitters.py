@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 K = 64  # Misra-Gries counters per partition -> threshold phi = 1/65
 
@@ -133,9 +134,7 @@ def heavy_hitters_exact(docs: DataFrame, k: int = K) -> DataFrame:
         .collect()[0][0]
     ) or 0
     candidates = summaries.filter(F.col("tok") != _SENTINEL).select("tok").distinct()
-    toks = docs.select(
-        F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = docs.select(F.explode(tokens("text")).alias("tok")).filter(F.col("tok") != "")
     return (
         toks.join(F.broadcast(candidates), "tok", "left_semi")
         .groupBy("tok")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 
 def positional_postings(
@@ -53,7 +54,7 @@ def positional_postings(
     the full build, where bucket pruning plays the same role."""
     flat = docs.select(
         "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "tok"),
+        F.posexplode(tokens("text")).alias("pos", "tok"),
     ).filter(F.col("tok") != "")
     if only_tokens is not None:
         flat = flat.filter(F.col("tok").isin(*only_tokens))
@@ -118,9 +119,7 @@ def kwic_snippets(
         "doc_id",
         "first_pos",
         "n_occurrences",
-        F.array_join(
-            F.slice(F.split("text", " "), start, length), " "
-        ).alias("snippet"),
+        F.array_join(F.slice(tokens("text"), start, length), " ").alias("snippet"),
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 QUANTILES = (25, 50, 75, 90, 99)  # percent points, integers for exactness
 
@@ -36,7 +37,7 @@ def token_length_histogram(docs: DataFrame) -> DataFrame:
     """(n_tokens, n_docs): the full exact length distribution — the
     one data-sized shuffle of this module."""
     return (
-        docs.select(F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"))
+        docs.select(F.size(tokens("text")).cast("bigint").alias("n_tokens"))
         .groupBy("n_tokens")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     )

@@ -37,14 +37,12 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import barrier_persist, load, spread
+from dronedb_spark.text.tokens import tokens
 
 
 def explode_tokens(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, tok), whitespace tokens (the corpus is
-    single-space separated; same convention as token_counts)."""
-    return docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-    )
+    """(doc_id, text) → (doc_id, tok), one row per ``tokens`` entry."""
+    return docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
 
 
 def train_unigram(train_docs: DataFrame) -> DataFrame:
@@ -165,7 +163,7 @@ def q_lm_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def explode_bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, w1, w2) for consecutive token pairs — zip_with over the
     token array and its tail, no posexplode/self-join."""
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import words
 
 TOTAL_BUDGET = 10000
 
@@ -190,7 +191,7 @@ def mixture_plan(docs: DataFrame, budget_docs: int = BUDGET_DOCS) -> DataFrame:
     weighting."""
     toks = docs.select(
         "source",
-        F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias("nt"),
+        F.size(words("text")).alias("nt"),
     )
     per_src = toks.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 
 def running_offsets(df: DataFrame, order_col: str, value_col: str,
@@ -61,7 +62,7 @@ def running_offsets(df: DataFrame, order_col: str, value_col: str,
 def doc_spans(docs: DataFrame) -> DataFrame:
     """→ (doc_id, n_tok, start) in doc_id concat order."""
     toks = docs.select(
-        "doc_id", F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok")
+        "doc_id", F.size(tokens("text")).cast("long").alias("n_tok")
     )
     return running_offsets(toks, "doc_id", "n_tok", "start")
 
@@ -76,9 +77,9 @@ def pack_sequences(docs: DataFrame, seq_len: int) -> DataFrame:
     # relation (r14, guide §2.4: the spans subtree re-ran its range
     # exchange + window per reference; materializing it instead measured
     # SLOWER than this re-derivation — see OPTIMIZATION_r14.md)
-    total = docs.select(
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok")
-    ).agg(F.sum("n_tok").alias("_total"))
+    total = docs.select(F.size(tokens("text")).cast("long").alias("n_tok")).agg(
+        F.sum("n_tok").alias("_total")
+    )
     chunks = spans.select(
         "doc_id",
         F.explode(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load, spread
+from dronedb_spark.text.tokens import tokens
 
 
 def token_ranks(docs: DataFrame) -> DataFrame:
@@ -35,7 +36,7 @@ def token_ranks(docs: DataFrame) -> DataFrame:
     frequent, ties lexicographic."""
     counts = (
         spread(docs)
-        .select("source", F.explode(F.split("text", " ")).alias("tok"))
+        .select("source", F.explode(tokens("text")).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 MIN_MARGIN_MICRO = 100_000  # require a 0.1 score gap
 
@@ -127,11 +128,12 @@ def q_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     score (distinct-token ratio), margin ≥ 0.1 enforced — the DPO data
     prep over the corpus the quality family already scores."""
     docs = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    score = F.expr(
-        "CAST(FLOOR(CAST(size(array_distinct(split(text, ' '))) AS DOUBLE)"
-        " / CAST(size(split(text, ' ')) AS DOUBLE) * 1000000.0) AS BIGINT)"
-    )
+    toks = tokens("text")
+    score = F.floor(
+        F.size(F.array_distinct(toks)).cast("double")
+        / F.size(toks).cast("double")
+        * 1000000.0
+    ).cast("bigint")
     return preference_pairs(docs, "source", score).orderBy(
         "source", "pair_rank"
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 MICRO = 1_000_000
 
@@ -123,8 +124,10 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, one row per document (the mapping join is pytest-pinned
     to cover every rank exactly once)."""
     docs = load(spark, sf_dir, "documents")
-    score_spark = F.expr(
-        "CAST(FLOOR(CAST(size(array_distinct(split(text, ' '))) AS DOUBLE)"
-        " / CAST(size(split(text, ' ')) AS DOUBLE) * 1000000.0) AS BIGINT)"
-    )
+    toks = tokens("text")
+    score_spark = F.floor(
+        F.size(F.array_distinct(toks)).cast("double")
+        / F.size(toks).cast("double")
+        * 1000000.0
+    ).cast("bigint")
     return quantile_normalize(docs, "source", score_spark).orderBy("doc_id")

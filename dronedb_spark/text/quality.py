@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 # Stopword profiles for the n-gram/keyword language heuristic.  Scoring =
 # total occurrences of each language's marker words; argmax with a fixed
@@ -28,16 +29,11 @@ def _occurrences(col: Column, needle: str) -> Column:
     return (F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))) / len(needle)
 
 
-def token_count(col: Column) -> Column:
-    """Whitespace tokenization (the corpus is single-space separated)."""
-    return F.size(F.split(col, " ")).cast("bigint")
-
-
 def quality_metrics(docs: DataFrame) -> DataFrame:
     """Per-doc quality signals: length, token count, mean token length,
     distinct-token ratio (lexical diversity), stopword ratio."""
     text = F.col("text")
-    toks = F.split(text, " ")
+    toks = tokens(text)
     n_tok = F.size(toks).cast("bigint")
     stop_hits = sum(_occurrences(text, m) for m in LANG_MARKERS["en"]).cast("bigint")
     return docs.select(
@@ -133,7 +129,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
     estimation pass of a training pipeline, no UDF."""
     return docs.select(
         "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_ws_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_ws_tokens"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_PAT), F.lit(0)))
         .cast("long")
         .alias("n_bpe_tokens"),
@@ -166,7 +162,7 @@ def vocab_top_tokens(docs: DataFrame, k: int = 50) -> DataFrame:
     """Vocabulary building: token histogram + top-k — the tokenizer-prep
     pass of a training pipeline.  explode → map-side-combined count →
     TakeOrdered top-k."""
-    toks = docs.select(F.explode(F.split("text", " ")).alias("tok"))
+    toks = docs.select(F.explode(tokens("text")).alias("tok"))
     return (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))

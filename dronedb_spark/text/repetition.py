@@ -24,12 +24,13 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 
 def repetition_metrics(documents: DataFrame) -> DataFrame:
     """Per doc: n_tokens, top-unigram count, n_bigrams, duplicated-bigram
     mass (sum of counts of bigrams occurring more than once in the doc)."""
-    toks = documents.select("doc_id", F.split("text", " ").alias("toks"))
+    toks = documents.select("doc_id", tokens("text").alias("toks"))
     grams = toks.select(
         "doc_id",
         F.explode(

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 SEG_WORDS = 8
 
@@ -41,7 +42,7 @@ def corpus_segments(
     inserts an exchange after tokenization, which projection collapse
     cannot cross, making tokenization linear again at the cost of
     shuffling the token arrays once."""
-    toks = documents.select("doc_id", F.split("text", " ").alias("toks"))
+    toks = documents.select("doc_id", tokens("text").alias("toks"))
     if tokens_barrier:
         toks = toks.repartition(documents.sparkSession.sparkContext.defaultParallelism)
     return toks.select(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 WORDS_PER_TURN = 8
 LAST_K_TURNS = 4
@@ -37,7 +38,7 @@ def to_turns(docs: DataFrame, words_per_turn: int = WORDS_PER_TURN) -> DataFrame
     odd are 'assistant' (conversations open with the user)."""
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "tok"),
+        F.posexplode(tokens("text")).alias("pos", "tok"),
     ).filter(F.col("tok") != "")
     turned = toks.select(
         "doc_id", F.expr(f"pos DIV {words_per_turn}").alias("turn_no")

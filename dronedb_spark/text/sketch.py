@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import words
 
 P = 8  # register address bits: m = 256 registers, sigma ~ 6.5%
 M = 1 << P
@@ -44,9 +45,7 @@ def hll_token_registers(docs: DataFrame) -> DataFrame:
     bit_length(v), with v = 0 mapping to the full 61.  Buckets never
     observed are absent (their register is implicitly 0).
     """
-    toks = docs.select(F.explode(F.split("text", " ")).alias("tok")).filter(
-        F.col("tok") != ""
-    )
+    toks = docs.select(F.explode(words("text")).alias("tok"))
     bucket = F.expr("CAST(conv(substr(md5(tok), 1, 2), 16, 10) AS BIGINT)")
     v = F.expr("CAST(conv(substr(md5(tok), 3, 15), 16, 10) AS BIGINT)")
     rho = F.when(v == 0, F.lit(61)).otherwise(61 - F.length(F.expr("bin(CAST(conv(substr(md5(tok), 3, 15), 16, 10) AS BIGINT))")))
@@ -111,9 +110,7 @@ def cms_token_sketch(docs: DataFrame) -> DataFrame:
     Scale: one groupBy((row, col)) with map-side partial sums — at most
     d*w rows leave each partition, the same O(state) shuffle bound as
     the HLL registers."""
-    toks = docs.select(F.explode(F.split("text", " ")).alias("tok")).filter(
-        F.col("tok") != ""
-    )
+    toks = docs.select(F.explode(words("text")).alias("tok"))
     rows = toks.select(
         F.explode(
             F.array(
@@ -201,9 +198,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verifies the exact sketch state AND that est carries the
     one-sided error (est >= true always holds by construction)."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(F.split("text", " ")).alias("tok")).filter(
-        F.col("tok") != ""
-    )
+    toks = docs.select(F.explode(words("text")).alias("tok"))
     # ``top`` is 20 rows but its subtree is a full corpus tokenize +
     # token groupBy; it feeds TWO consumers (the probe side and the
     # final join) — materialize it once (r14, guide §2.4) instead of

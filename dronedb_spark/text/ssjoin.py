@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load, spread
+from dronedb_spark.text.tokens import tokens
 
 TAU_PCT = 80
 
@@ -56,7 +57,7 @@ def _doc_arrays(docs: DataFrame) -> DataFrame:
     # the corpus for each (guide §2.4).
     toks = barrier_persist(
         spread(docs)
-        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", tokens("text").alias("toks"))
         .filter(F.size("toks") >= 3)
         .select(
             "doc_id",

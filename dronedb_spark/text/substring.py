@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load, register_views, spread
+from dronedb_spark.text.tokens import tokens
 
 K_TOKENS = 6  # minimum duplicated-span length in tokens
 
@@ -72,7 +73,7 @@ def anchor_kgrams(docs: DataFrame, k: int = K_TOKENS) -> DataFrame:
     """(doc_id, pos, ah): overlapping k-gram anchors — pos is the
     1-based token index of the gram's first token, ah its 60-bit md5
     prefix hash."""
-    toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    toks = docs.select("doc_id", tokens("text").alias("toks"))
     grams = toks.select("doc_id", _kgram_col(k).alias("grams"))
     return grams.select(
         "doc_id", F.posexplode("grams").alias("p0", "gram")
@@ -154,14 +155,18 @@ def substring_dedup_rewrite(docs: DataFrame, k: int = K_TOKENS) -> DataFrame:
         F.collect_list(F.struct("span_start", "span_end")).alias("spans")
     )
     joined = docs.join(per_doc, "doc_id", "left")
-    kept = F.expr(
-        """filter(transform(split(text, ' '), (t, i) -> struct(t AS t, i + 1 AS p)),
-                  x -> spans IS NULL OR NOT exists(spans,
-                       s -> x.p >= s.span_start AND x.p <= s.span_end))"""
+    kept = F.filter(
+        F.transform(
+            tokens("text"), lambda t, i: F.struct(t.alias("t"), (i + 1).alias("p"))
+        ),
+        lambda x: F.col("spans").isNull()
+        | ~F.exists(
+            "spans", lambda s: (x.p >= s.span_start) & (x.p <= s.span_end)
+        ),
     )
     return joined.select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
         kept.alias("_kept"),
     ).select(
         "doc_id",

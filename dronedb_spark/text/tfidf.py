@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from dronedb_spark.suite import check
 from dronedb_spark.tables import load
+from dronedb_spark.text.tokens import tokens
 
 TOP_K = 5
 
@@ -30,7 +31,7 @@ TOP_K = 5
 def tfidf_topterms(docs: DataFrame, k: int = TOP_K) -> DataFrame:
     """(source, rank, tok, tf, df, score_micro): top-k terms per source
     by the integer micro-quotient score."""
-    toks = docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
+    toks = docs.select("source", F.explode(tokens("text")).alias("tok"))
     tf = toks.groupBy("source", "tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )

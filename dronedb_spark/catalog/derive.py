@@ -187,10 +187,15 @@ def with_catalog(query_sql: str, variants: tuple[str, ...] = ("a",), meta: bool 
     return "WITH " + ",\n".join(ctes) + "\n" + query_sql
 
 
-# (applicationId, sf_dir, variant) -> persisted derived catalog.  ~25
-# driver checks derive the same entries table; persisting the derivation
-# (md5 hashing + path assembly over documents) once per session removes
-# it from every subsequent check.
+# (applicationId, sf_dir, variant) -> derived catalog.  ~25 driver checks
+# derive the same entries table; the memo hands them one DataFrame, and a
+# hit saves the view registration and analysis a fresh derivation costs
+# (about 60 ms for entries, 23 ms for entries_meta; sf0.001, 4 vCPU,
+# median of 8).  Deliberately NOT .persist()ed:
+# ``reset_run_cache`` clears the block-manager cache before every timed
+# run and every parity check, so a persist would put an InMemoryTableScan
+# only into the first deriving check of a session, and a check's plan
+# would depend on which checks ran before it.
 _DERIVE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -200,7 +205,7 @@ def entries_df(spark: SparkSession, sf_dir: str, variant: str = "a") -> DataFram
     hit = _DERIVE_CACHE.get(key)
     if hit is None:
         register_views(spark, sf_dir, ["documents"])
-        hit = spark.sql(entries_sql(variant)).persist()
+        hit = spark.sql(entries_sql(variant))
         _DERIVE_CACHE[key] = hit
     return hit
 
@@ -210,6 +215,6 @@ def entries_meta_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = _DERIVE_CACHE.get(key)
     if hit is None:
         register_views(spark, sf_dir, ["events"])
-        hit = spark.sql(META_SQL).persist()
+        hit = spark.sql(META_SQL)
         _DERIVE_CACHE[key] = hit
     return hit

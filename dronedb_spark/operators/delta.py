@@ -185,19 +185,19 @@ def stamp_tree_digest(entries: DataFrame, n_buckets: int = 16) -> DataFrame:
     return per.agg(F.sha2(_sorted_concat("digest", by=("bucket",)), 256).alias("checksum"))
 
 
-@check(
-    "stamp_tree_digest",
-    oracle=with_catalog(
-        """WITH b AS (
-               SELECT instr('0123456789abcdef', substr(md5(path), 1, 1)) - 1 AS bucket,
-                      path, hash
-               FROM entries),
-           per AS (
-               SELECT bucket, sha256(string_agg(path || hash, '' ORDER BY path)) AS digest
-               FROM b GROUP BY bucket)
-           SELECT sha256(string_agg(digest, '' ORDER BY bucket)) AS checksum FROM per"""
-    ),
-)
+# An empty catalog stamps as sha256 of the empty string, as in
+# stamp_checksum's oracle.
+TREE_DIGEST_SQL = """WITH b AS (
+       SELECT instr('0123456789abcdef', substr(md5(path), 1, 1)) - 1 AS bucket,
+              path, hash
+       FROM entries),
+   per AS (
+       SELECT bucket, sha256(string_agg(path || hash, '' ORDER BY path)) AS digest
+       FROM b GROUP BY bucket)
+   SELECT sha256(COALESCE(string_agg(digest, '' ORDER BY bucket), '')) AS checksum FROM per"""
+
+
+@check("stamp_tree_digest", oracle=with_catalog(TREE_DIGEST_SQL))
 def q_stamp_tree_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stamp_tree_digest(entries_df(spark, sf_dir))
 

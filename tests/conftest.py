@@ -1,12 +1,14 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from dronedb_spark.session import get_spark  # noqa: E402
 
@@ -48,3 +50,10 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def plan_ledger():
+    """PLANS.json: check name -> ``plan_shape`` of its DataFrame at sf0.001
+    (written by ``tools/plan_ledger.py``)."""
+    return json.loads((ROOT / "PLANS.json").read_text())

@@ -15,10 +15,55 @@ from dronedb_spark.plans.inspect import (
     has_broadcast_join,
     has_cartesian,
     has_partial_aggregation,
+    plan_shape,
     pushed_filters,
     physical_plan,
 )
 from dronedb_spark.tables import load
+
+
+def _join_then_group(spark, big):
+    small = spark.range(10).toDF("k")
+    return big.join(small, F.col("id") == F.col("k")).groupBy("k").count()
+
+
+def test_plan_shape_counts_broadcast_apart_from_shuffle(spark):
+    """One partition joined to a broadcast, then grouped: no shuffle."""
+    q = _join_then_group(spark, spark.range(0, 1000, 1, 1))
+    assert plan_shape(q)["BroadcastExchange"] == 1 and "Exchange" not in plan_shape(q)
+    assert exchange_count(q) == 0 and has_broadcast_join(q)
+
+
+def test_plan_shape_is_the_same_before_and_after_execution(spark):
+    """The walk reads AQE's initial plan, which running the query (and
+    settling AQE's final plan) does not change."""
+    q = _join_then_group(spark, spark.range(1000))
+    before = plan_shape(q)
+    q.collect()
+    assert plan_shape(q) == before
+
+
+def test_plan_shape_descends_into_cached_plan(spark):
+    cached = spark.range(100).withColumn("x", F.col("id") * 2).persist()
+    try:
+        shape = plan_shape(cached.groupBy((F.col("id") % 3).alias("m")).count())
+    finally:
+        cached.unpersist()
+    # the Range lives only in the cached plan
+    assert shape["InMemoryTableScan"] == 1 and shape["Range"] == 1, shape
+
+
+def test_plan_shape_descends_into_scalar_subquery(spark):
+    q = spark.sql("SELECT id FROM range(9) WHERE id > (SELECT max(id) FROM range(5))")
+    shape = plan_shape(q)
+    # the max aggregate and the second range exist only in the subquery
+    assert shape["Subquery"] == 1 and shape["Range"] == 2 and shape["HashAggregate"] == 2, shape
+
+
+def test_plan_shape_counts_pushed_scans(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    assert plan_shape(li.filter("l_quantity > 10"))["pushed_scans"] == 1
+    assert "pushed_scans" not in plan_shape(li.select("l_quantity"))
 
 
 @pytest.fixture(scope="module")
@@ -53,12 +98,9 @@ def test_type_filter_pushed(spark, entries_parquet):
 
 
 def test_column_pruning(spark, entries_parquet):
-    q = entries_parquet.select("path", "size")
-    plan = physical_plan(q)
-    assert "ReadSchema" not in plan or True  # formatted holds ReadSchema
     from dronedb_spark.plans.inspect import formatted
 
-    f = formatted(q)
+    f = formatted(entries_parquet.select("path", "size"))
     read = [line for line in f.splitlines() if "ReadSchema" in line][0]
     assert "path" in read and "size" in read and "polygon" not in read and "hash" not in read
 
@@ -91,14 +133,21 @@ def test_minhash_no_cartesian_one_shuffle_for_pairs(spark):
     assert not has_cartesian(q)
 
 
-def test_knn_broadcasts_query_vector(spark):
-    from dronedb_spark.vectors.knn import knn_cosine
+# The tests that read ``plan_ledger`` pin a design property of a
+# registered check on its PLANS.json entry; test_parity holds that entry
+# to the live plan in every default run (its ``_LEDGER_READS``), and these
+# keep a blind ledger rewrite from dropping the property.
 
-    q = knn_cosine(load(spark, "/root/testdata/sf0.001", "embeddings"), 0)
-    p = physical_plan(q)
-    assert "Broadcast" in p
+
+def _nested_loop_or_cartesian(shape: dict[str, int]) -> bool:
+    return "CartesianProduct" in shape or "BroadcastNestedLoopJoin" in shape
+
+
+def test_knn_broadcasts_query_vector(plan_ledger):
+    shape = plan_ledger["knn_cosine_top10"]
+    assert shape.get("BroadcastExchange")
     # top-k must be TakeOrderedAndProject, not a global sort
-    assert "TakeOrderedAndProject" in p
+    assert shape.get("TakeOrderedAndProject") == 1 and "Sort" not in shape
 
 
 def test_meta_join_broadcasts_agg_side(spark):
@@ -159,29 +208,18 @@ def test_interval_join_no_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_q2_window_min_single_scan(spark):
+def test_q2_window_min_single_scan(plan_ledger):
     """The correlated-MIN rewrite must read lineitem once (window min), not
     twice (decorrelated aggregate + self-join)."""
-    from dronedb_spark.operators.relational import q_min_cost_supplier
-
-    q = q_min_cost_supplier(spark, "/root/testdata/sf0.001")
-    plan = physical_plan(q)
-    # lineitem arrives via tables.load, which persists — the single read
-    # shows as one in-memory scan (whose printed subtree embeds the parquet
-    # scan it materializes from) or, cold, one parquet scan; the pinned
-    # property is ONE read of lineitem, not its storage tier.
-    n_mem = plan.count("InMemoryTableScan")
-    assert n_mem == 1 or (n_mem == 0 and plan.count("Scan parquet") == 1), plan
+    shape = plan_ledger["q2_min_cost_supplier"]
+    assert shape["Scan parquet"] == 1 and shape["Window"] == 1, shape
 
 
-def test_asof_join_single_shuffle_per_side(spark):
+def test_asof_join_single_shuffle_per_side(plan_ledger):
     """The union-merge as-of join is one exchange for the union input (the
     window partition) plus the final order — no join operator at all."""
-    from dronedb_spark.operators.asof import q_asof_join
-
-    q = q_asof_join(spark, "/root/testdata/sf0.001")
-    plan = physical_plan(q)
-    assert "Join" not in plan or "SortMergeJoin" not in plan
+    shape = plan_ledger["asof_join_events"]
+    assert not [n for n in shape if "Join" in n], shape
 
 
 def test_raster_kernels_group_by_raster_no_single_partition(spark):
@@ -246,21 +284,17 @@ def test_q8_q9_broadcast_dims_no_nested_loop(spark):
     assert "BroadcastHashJoin" in p9
     assert not has_cartesian(q9)
     assert "BroadcastNestedLoopJoin" not in p9
-    # the part name filter must apply at the (cached) part scan, below the
-    # join — load() serves InMemoryRelations, so it shows as a pushed
-    # predicate on InMemoryTableScan rather than parquet PushedFilters
+    # the part name filter must apply at the part scan, below the join —
+    # load() does not persist (tables.py), so it is the Filter directly
+    # over the parquet scan of part
     assert "Contains(p_name" in p9
 
 
-def test_spatial_join_no_cartesian(spark):
+def test_spatial_join_no_cartesian(plan_ledger):
     """The grid-bucketed containment join must plan as an equi-join on the
     cell key — never a cartesian/nested-loop over the raw predicate."""
-    from dronedb_spark.operators.spatial import q_spatial_join_counts
-
-    q = q_spatial_join_counts(spark, "/root/testdata/sf0.001")
-    plan = physical_plan(q)
-    assert not has_cartesian(q)
-    assert "BroadcastNestedLoopJoin" not in plan
+    shape = plan_ledger["spatial_join_counts"]
+    assert shape.get("BroadcastHashJoin") and not _nested_loop_or_cartesian(shape)
 
 
 def test_mvt_pbf_sink_single_shuffle(spark):
@@ -422,16 +456,12 @@ def test_packing_prefix_sum_is_two_phase(spark):
     assert not has_cartesian(q)
 
 
-def test_lm_score_head_is_broadcast(spark):
-    from dronedb_spark.suite import load_all
-
-    reg = load_all()
-    q = reg["lm_doc_perplexity"].spark_fn(spark, "/root/testdata/sf0.001")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # the hot head never shuffles
+def test_lm_score_head_is_broadcast(plan_ledger):
+    shape = plan_ledger["lm_doc_perplexity"]
+    assert shape.get("BroadcastHashJoin")  # the hot head never shuffles
     # the 1-row corpus-totals broadcast cross join is deliberate; only a
     # data-sized cartesian is forbidden
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in shape
 
 
 def test_pca_moments_single_reduce(spark):
@@ -445,14 +475,9 @@ def test_pca_moments_single_reduce(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_tile_render_grid_broadcast(spark):
-    from dronedb_spark.suite import load_all
-
-    reg = load_all()
-    q = reg["raster_tile_render"].spark_fn(spark, "/root/testdata/sf0.001")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert not has_cartesian(q)
+def test_tile_render_grid_broadcast(plan_ledger):
+    shape = plan_ledger["raster_tile_render"]
+    assert shape.get("BroadcastHashJoin") and not _nested_loop_or_cartesian(shape)
 
 
 def test_elevation_profile_never_shuffles_pixels(spark):
@@ -488,29 +513,20 @@ def test_pull_plan_broadcasts_delta_side(spark):
     assert not has_cartesian(q)
 
 
-def test_incremental_dedup_probe_shape(spark):
+def test_incremental_dedup_probe_shape(plan_ledger):
     """The corpus-store probe is a bucket equi-join plus one grouped
     aggregation of the hit set — no cartesian anywhere, and the
     aggregation must partial-aggregate before its shuffle."""
-    from dronedb_spark.suite import load_all
-
-    reg = load_all()
-    q = reg["incremental_dedup_probe"].spark_fn(spark, "/root/testdata/sf0.001")
-    assert not has_cartesian(q)
-    assert has_partial_aggregation(q)
+    shape = plan_ledger["incremental_dedup_probe"]
+    assert not _nested_loop_or_cartesian(shape) and shape["HashAggregate"] >= 2
 
 
-def test_push_plan_no_broadcast_no_cartesian(spark):
+def test_push_plan_no_broadcast_no_cartesian(plan_ledger):
     """push_plan anti-joins the two DISTINCT hash sets — both stamps are
-    corpus-sized so NOTHING may be broadcast or crossed; the hash de-dup
-    must partial-aggregate map-side before its shuffle."""
-    from dronedb_spark.suite import load_all
-
-    reg = load_all()
-    q = reg["push_needed_files"].spark_fn(spark, "/root/testdata/sf0.001")
-    assert not has_cartesian(q)
-    assert has_partial_aggregation(q)
-    assert "BroadcastNestedLoopJoin" not in physical_plan(q)
+    corpus-sized so nothing may be crossed; the hash de-dup must
+    partial-aggregate map-side before its shuffle."""
+    shape = plan_ledger["push_needed_files"]
+    assert not _nested_loop_or_cartesian(shape) and shape["HashAggregate"] >= 2
 
 
 def test_push_init_stale_base_refuses(spark):
@@ -614,16 +630,14 @@ def test_ivf_store_probe_prunes_partitions(spark, tmp_path):
 def test_no_unbounded_persists():
     """Cache-hygiene guard (r7): every ``.persist(`` site in the package
     must be BOUNDED — unpersisted deterministically in the same
-    function (bpe's try/finally iteration ladder), held in a keyed
-    at-most-one-per-(app, sf) session cache (derive's check-shared
-    derivations), or issued through ``tables.barrier_persist`` (a keyed
-    LRU capped at _BARRIER_MAX entries whose eviction unpersists).  A
-    new bare persist anywhere else is a storage leak in a long-running
-    service and fails here."""
+    function (bpe's try/finally iteration ladder) or issued through
+    ``tables.barrier_persist`` (a keyed LRU capped at _BARRIER_MAX
+    entries whose eviction unpersists).  A new bare persist anywhere
+    else is a storage leak in a long-running service and fails here."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "dronedb_spark"
-    allowed = {"text/bpe.py", "catalog/derive.py", "tables.py"}
+    allowed = {"text/bpe.py", "tables.py"}
     offenders = []
     for py in pkg.rglob("*.py"):
         rel = str(py.relative_to(pkg))

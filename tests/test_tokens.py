@@ -1,6 +1,7 @@
 """The corpus tokenizer (``dronedb_spark.text.tokens``): its rule against
 DuckDB's on input the fixtures never hold, the one-tokenizer rule over
-the package source, and the stamp digest's NULL guard."""
+the package source, and the stamp digest's NULL and empty-catalog
+guards."""
 
 from __future__ import annotations
 
@@ -76,3 +77,17 @@ def test_stamp_tree_digest_value_and_null_guard(spark):
     assert stamp_tree_digest(ent).collect()[0]["checksum"] == hashlib.sha256(root.encode()).hexdigest()
     with_null = ent.unionByName(spark.createDataFrame([("z.jpg", None)], "path string, hash string"))
     assert stamp_tree_digest(with_null).collect()[0]["checksum"] is None
+
+
+def test_stamp_tree_digest_empty_catalog_matches_oracle(spark):
+    """An empty catalog stamps as sha256 of the empty string on both
+    sides: the oracle's outer ``string_agg`` over no buckets is NULL
+    without its COALESCE."""
+    from dronedb_spark.operators.delta import TREE_DIGEST_SQL, stamp_tree_digest
+
+    ent = spark.createDataFrame([], "path string, hash string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE entries (path VARCHAR, hash VARCHAR)")
+    oracle = con.execute(TREE_DIGEST_SQL).fetchall()
+    assert [tuple(r) for r in stamp_tree_digest(ent).collect()] == oracle
+    assert oracle == [(hashlib.sha256(b"").hexdigest(),)]
